@@ -273,7 +273,6 @@ def main():
             target_path=f"{work}/target",
             max_entries_per_batch=(BENCH_OPS * 6) // 4 + 1,
             num_buckets=CPUS,
-            salt_buckets=8,
         )
         tailer = JournalTailer(spark, cfg)
         t0 = time.time()
@@ -320,7 +319,6 @@ def main():
             target_path=f"{work}/target_bin",
             max_entries_per_batch=(BENCH_OPS * 6) // 4 + 1,
             num_buckets=CPUS,
-            salt_buckets=8,
             journal_format="binary",
         )
         t0 = time.time()

@@ -175,7 +175,6 @@ def run_apply(spark, variant: str):
                 target_path=f"{work}/target_{r}",
                 max_entries_per_batch=(ops * 6) // 4 + 1,
                 num_buckets=CPUS,
-                salt_buckets=8,
                 journal_format=fmt,
                 merge_write_mode="mor" if variant == "mor" else "cow",
             )

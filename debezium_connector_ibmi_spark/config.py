@@ -4,7 +4,7 @@ Mirrors the *semantics* of the reference connector's config surface
 (``As400ConnectorConfig.java`` — buffer size, max entries per fetch,
 poll interval, include lists, snapshot modes) re-expressed as the
 knobs a Spark engine actually needs: per-trigger entry budget, key
-bucket count, salt factor, checkpoint/target paths.
+bucket count, checkpoint/target paths.
 """
 
 from __future__ import annotations
@@ -26,8 +26,6 @@ class EngineConfig:
       "rewrite" keeps it with ``__deleted=true``.
     - ``num_buckets`` — target-table key-hash bucket count; the Spark
       analogue of partitioning the journal/target for pruned merges.
-    - ``salt_buckets`` — skew salting factor for hot MERGE keys
-      (north rule: explicit skew handling).
     """
 
     journal_path: str = ""
@@ -48,7 +46,6 @@ class EngineConfig:
 
     # target layout / merge strategy
     num_buckets: int = 32
-    salt_buckets: int = 8
     delete_mode: str = "drop"  # or "rewrite"
     # merge write strategy (Iceberg write.merge.mode analogue):
     #  "cow" copy-on-write: each merge reads+rewrites touched buckets
@@ -70,14 +67,6 @@ class EngineConfig:
     # of batch sizing. Free to evaluate: the depth rides the commit's
     # deltas map, no extra IO. Both triggers may be set; either fires.
     mor_compact_max_deltas: int = 0
-    # state-path compaction strategy:
-    #  "fused"  (default) max_by hash aggregation — partial map-side
-    #           combine (shuffle O(keys x map_tasks), no sort,
-    #           inherently skew-proof)
-    #  "window" single window pass (sorts events; useful when the
-    #           winner's neighbors are also needed)
-    #  "salted" two-phase salted window (legacy skew handling)
-    compaction_mode: str = "fused"
 
     # Debezium ``snapshot.mode`` analogue (reference config surface:
     # As400ConnectorConfig snapshot modes; semantics = Debezium core):

@@ -3,16 +3,15 @@ upsert-materialization core).
 
 Downstream of the reference, consumers fold the ordered I/U/D
 changelog per primary key (last-writer-wins, ``ExtractNewRecordState``
-in the reference README.md:188-192). Here that fold is a ranking
-window: ``row_number() over (partition by key order by
-(receiver_idx, seq) desc) = 1`` — one shuffle, hash-partitioned by
-key, whole-stage codegen, and it makes the subsequent MERGE
+in the reference README.md:188-192). ``last_event_per_key_agg`` is the
+fold the engine runs (state-path compaction, the cow merge winner and
+the flagship registry queries); it makes the subsequent MERGE
 order-free and idempotent (re-applying a batch is a no-op).
 
-Skew (north rule): hot urls concentrate a partition. The salted
-variant splits each key into ``salt_buckets`` sub-groups, compacts
-within each (map-side-friendly first pass), then compacts the small
-survivors per key — the classic two-phase skew-safe top-1.
+The ranking-window form and the salted two-phase variant (a hot key
+split into ``salt_buckets`` sub-groups, compacted within each, then
+the small survivors compacted per key) serve the registry queries
+that call them directly.
 """
 
 from __future__ import annotations
@@ -39,28 +38,29 @@ def last_event_per_key(
 
 def last_event_per_key_agg(
     events: DataFrame,
-    key: str = "url",
+    keys: tuple[str, ...] = ("url",),
     order_cols: tuple[str, ...] = ORDER_COLS,
     payload_cols: tuple[str, ...] | None = None,
 ) -> DataFrame:
-    """Hash-agg last-per-key: ``max_by(payload, position)``.
+    """One row per ``keys`` group: ``max_by(payload, order_cols)``.
 
-    The engine's default compaction plan (same shape as
-    ``pipeline.compact_for_state``): a hash aggregation with PARTIAL
-    map-side combine — each map task ships at most one candidate row
-    per key, so shuffle volume is O(keys × map_tasks) instead of
-    O(events), no sort anywhere, and hot keys collapse before they
-    can pile onto one reducer (inherently skew-proof). Requires
-    ``order_cols`` to be unique per key (positions are), otherwise
-    max_by ties are non-deterministic.
+    The aggregation combines partially map-side, so each map task
+    ships at most one candidate row per key and a hot key collapses
+    before it can pile onto one reducer. It is NOT a hash agg: the
+    value is a struct, which cannot live in a hash-agg buffer, so
+    Spark 4.1.2 plans ``SortAggregate`` with a ``Sort`` on both sides
+    of the exchange. Requires ``order_cols`` to be unique per key
+    (positions are), otherwise max_by ties are non-deterministic.
     """
-    payload_cols = tuple(payload_cols or [c for c in events.columns if c != key])
+    payload_cols = tuple(
+        payload_cols or [c for c in events.columns if c not in keys]
+    )
     pos = F.struct(*[F.col(c) for c in order_cols])
     payload = F.struct(*[F.col(c) for c in payload_cols])
     return (
-        events.groupBy(key)
+        events.groupBy(*keys)
         .agg(F.max_by(payload, pos).alias("__w"))
-        .select(key, *[F.col(f"__w.{c}").alias(c) for c in payload_cols])
+        .select(*keys, *[F.col(f"__w.{c}").alias(c) for c in payload_cols])
     )
 
 

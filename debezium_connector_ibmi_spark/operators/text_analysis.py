@@ -429,11 +429,8 @@ def lsh_verified_near_dups(
     # without persist()'s session-global CacheManager registration,
     # which would leak plan-matching cache state into every later
     # query of the session (bounded storage: two longs per pair).
-    import os as _os
-
     cand = lsh_candidate_pairs(df, id_col, text, seeds, n, rows_per_band)
-    if _os.environ.get("SPARK_GRAFT_LSH_CKPT", "1") != "0":
-        cand = cand.localCheckpoint(eager=False)
+    cand = cand.localCheckpoint(eager=False)
     # Per-doc distinct shingle SETS as map-side arrays — the verify
     # math is then a map-side array_intersect on the joined pair, so
     # the corpus-wide explode+distinct shuffle of the former shape

@@ -5,15 +5,14 @@ This is the Spark re-expression of the reference's hot path
 (``As400StreamingChangeEventSource.execute`` -> decode -> dispatch,
 SURVEY.md §3.2): declarative filters (pushed to the scan), a
 codegen'd op-type map, window-based UB/UP pairing, ONE vectorized
-decode UDF, and a skew-salted last-per-key compaction.
+decode UDF, and the ``max_by`` last-per-key compaction
+(``operators.compaction.last_event_per_key_agg``).
 
 Plan-shape invariants (checked in tests via ``.explain``):
 - table/code/type filters appear in ``PushedFilters`` of the scan;
 - the decode UDF runs AFTER compaction in ``current_state`` (decode
   cost scales with distinct keys, not event count);
-- exactly one shuffle for compaction (hash by key), one for pairing
-  (hash by key) — Catalyst reuses the exchange when partitioning
-  matches.
+- exactly one shuffle for compaction (hash by table and key).
 """
 
 from __future__ import annotations
@@ -25,7 +24,7 @@ from debezium_connector_ibmi_spark.config import EngineConfig
 from debezium_connector_ibmi_spark.functions.decode import extract_text_udf
 from debezium_connector_ibmi_spark.functions.optype import op_type_col
 from debezium_connector_ibmi_spark.operators.compaction import (
-    salted_last_event_per_key,
+    last_event_per_key_agg,
 )
 from debezium_connector_ibmi_spark.operators.filters import apply_standard_filters
 from debezium_connector_ibmi_spark.operators.pairing import pair_before_after
@@ -51,53 +50,6 @@ def with_text(events: DataFrame) -> DataFrame:
     return events.withColumn("text", extract_text_udf(F.col("html")))
 
 
-def compact_batch(events: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """Last-writer-wins per key over a (micro-)batch, skew-salted."""
-    return salted_last_event_per_key(events, cfg.key_column, cfg.salt_buckets)
-
-
-def pair_and_compact(journal_slice: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """Fused UB/UP pairing + last-per-key compaction in ONE window
-    pass (one shuffle of the event payloads, vs three for
-    pair -> salt-compact -> compact).
-
-    Single window over (table_name, url) ordered by (receiver_idx,
-    seq): ``lag`` recovers the before-image for updates;
-    ``max(position) over unbounded`` marks the last *data* event per
-    key; the filter keeps exactly that row. Skew note: a pathological
-    hot key serializes inside one window partition — for that regime
-    use compaction_mode="salted" (EngineConfig), which trades two
-    extra shuffles for hot-key splitting.
-    """
-    from pyspark.sql import Window
-
-    f = apply_standard_filters(journal_slice, cfg)
-    f = f.withColumn("op", op_type_col())
-    data = f.filter(F.col("op").isin("c", "u", "d", "b"))
-
-    w = Window.partitionBy("table_name", cfg.key_column).orderBy(
-        "receiver_idx", "seq"
-    )
-    wa = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    pos = F.struct(F.col("receiver_idx"), F.col("seq"))
-    prev_op = F.lag("op").over(w)
-    prev_before = F.lag("before_html").over(w)
-    last_data_pos = F.max(F.when(F.col("op") != "b", pos)).over(wa)
-    out = (
-        data.withColumn(
-            "before_html",
-            F.coalesce(
-                F.when((F.col("op") == "u") & (prev_op == "b"), prev_before),
-                F.col("before_html"),
-            ),
-        )
-        .withColumn("__last", (F.col("op") != "b") & (pos == last_data_pos))
-        .filter(F.col("__last"))
-        .drop("__last")
-    )
-    return out
-
-
 def compact_for_state(journal_slice: DataFrame, cfg: EngineConfig) -> DataFrame:
     """Last-per-key compaction for the MERGE/state path.
 
@@ -105,7 +57,6 @@ def compact_for_state(journal_slice: DataFrame, cfg: EngineConfig) -> DataFrame:
     BEFORE the shuffle and the ``before_html``/``null_mask`` columns
     never leave the scan — roughly halving shuffled bytes vs the
     pairing-aware path (the biggest single cost at 2KB+ payloads).
-    One window pass, one shuffle, or the two-phase salted variant.
     """
     f = apply_standard_filters(journal_slice, cfg)
     f = f.withColumn("op", op_type_col())
@@ -119,50 +70,7 @@ def compact_for_state(journal_slice: DataFrame, cfg: EngineConfig) -> DataFrame:
         "warc_ts",
         "lang",
     )
-    if cfg.compaction_mode == "salted":
-        return salted_last_event_per_key(data, cfg.key_column, cfg.salt_buckets)
-    if cfg.compaction_mode == "window":
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("table_name", cfg.key_column)
-        pos = F.struct(F.col("receiver_idx"), F.col("seq"))
-        last_pos = F.max(pos).over(
-            w.orderBy("receiver_idx", "seq").rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        )
-        return (
-            data.withColumn("__last", pos == last_pos)
-            .filter(F.col("__last"))
-            .drop("__last")
-        )
-    # default "fused"/"agg": max_by hash aggregation. Unlike the
-    # window (full sort of every event, all payload bytes shuffled),
-    # a hash agg does PARTIAL map-side combine — each map task ships
-    # at most one candidate row per key, so shuffle volume drops from
-    # O(events) to O(keys x map_tasks) and no sort happens at all.
-    # max_by is deterministic here because (receiver_idx, seq) is
-    # unique per entry. This is also inherently skew-proof: a hot
-    # key's events collapse map-side before they can pile onto one
-    # reducer (the salted mode remains for the window variants).
-    pos = F.struct(F.col("receiver_idx"), F.col("seq"))
-    payload = F.struct(
-        "receiver_idx", "seq", "op", "html", "warc_ts", "lang"
-    )
-    return (
-        data.groupBy("table_name", cfg.key_column)
-        .agg(F.max_by(payload, pos).alias("w"))
-        .select(
-            "table_name",
-            cfg.key_column,
-            "w.receiver_idx",
-            "w.seq",
-            "w.op",
-            "w.html",
-            "w.warc_ts",
-            "w.lang",
-        )
-    )
+    return last_event_per_key_agg(data, keys=("table_name", cfg.key_column))
 
 
 def current_state(journal: DataFrame, cfg: EngineConfig) -> DataFrame:

@@ -78,14 +78,13 @@ def cdc_resume_predicate(spark, sf_dir):
     )
 
 
-# --- last-per-key compaction (the engine's max_by hash-agg plan) ------
+# --- last-per-key compaction (the engine's max_by plan) ---------------
 def cdc_last_per_key(spark, sf_dir):
-    """Default compaction plan: max_by hash agg with map-side partial
-    combine (shuffle O(keys×map_tasks), skew-proof). The window
-    variant is pinned separately by cdc_last_per_key_salted."""
+    """The engine's compaction plan (``last_event_per_key_agg``). The
+    window variant is pinned separately by cdc_last_per_key_salted."""
     df = _events(spark, sf_dir)
     last = last_event_per_key_agg(
-        df, key="user_id", order_cols=("ts", "event_id")
+        df, keys=("user_id",), order_cols=("ts", "event_id")
     )
     return last.select(
         "user_id",
@@ -244,11 +243,11 @@ def cdc_quarantine_rows(spark, sf_dir):
 
 # --- flagship: changelog materialization (last-per-key, drop deletes) ------
 def cdc_changelog_materialize(spark, sf_dir):
-    """Flagship contract query — exercises the engine's default
-    max_by hash-agg compaction (pipeline.compact_for_state shape),
-    not the window fallback."""
+    """Flagship contract query — exercises the engine's max_by
+    compaction (``last_event_per_key_agg``, as in
+    pipeline.compact_for_state), not a window."""
     df = _events(spark, sf_dir).withColumn("op", _op())
-    last = last_event_per_key_agg(df, key="user_id", order_cols=("event_id",))
+    last = last_event_per_key_agg(df, keys=("user_id",), order_cols=("event_id",))
     return last.filter(F.col("op") != "d").select(
         "user_id",
         F.col("event_id").alias("last_event_id"),
@@ -270,7 +269,7 @@ def cdc_state_dedup(spark, sf_dir):
     )
 
     df = _events(spark, sf_dir).withColumn("op", _op())
-    last = last_event_per_key_agg(df, key="user_id", order_cols=("event_id",))
+    last = last_event_per_key_agg(df, keys=("user_id",), order_cols=("event_id",))
     live = last.filter(F.col("op") != "d").select(
         "user_id", fingerprint(F.col("props")).alias("fp")
     )

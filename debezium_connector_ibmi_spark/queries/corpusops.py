@@ -21,14 +21,6 @@ def _docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-def _docs_par(spark, sf_dir):
-    """Single-row-group scan spread over the default parallelism for
-    map-heavy queries — same rationale as queries/textops._docs_par."""
-    return _docs(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
-
-
 # ---------------------------------------------------------------- PII
 
 def doc_pii_scrub(spark, sf_dir):

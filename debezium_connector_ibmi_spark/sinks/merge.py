@@ -39,6 +39,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from debezium_connector_ibmi_spark.operators.compaction import (
+    last_event_per_key_agg,
+)
+
 
 class KeyBucketedTarget:
     def __init__(
@@ -771,10 +775,6 @@ class KeyBucketedTarget:
                 return {"skipped": True, "batch_id": batch_id}
             effective_id = self.last_batch_id() + 1
 
-        from debezium_connector_ibmi_spark.operators.compaction import (
-            last_event_per_key,
-        )
-
         version = self._latest_version() + 1
         last = self.last_commit()
 
@@ -805,7 +805,7 @@ class KeyBucketedTarget:
         # greatest (receiver_idx, seq); batch beats state on ties
         # (replayed position). This is Iceberg's
         # `WHEN MATCHED AND s.pos >= t.pos THEN UPDATE` shape, built
-        # from the same compaction window the engine already uses.
+        # from the same last-per-key fold the engine compacts with.
         batch_side = batch.withColumn("__src", F.lit(1))
         if last is None:
             combined = batch_side
@@ -828,40 +828,15 @@ class KeyBucketedTarget:
             else:
                 combined = batch_side
 
-        # winner per key via max_by hash agg, not a rank window: both
-        # sides are unique per key (state is resolved, the batch is
-        # pre-compacted), so each key holds <= 2 rows and the agg is
-        # deterministic — ties on (receiver_idx, seq) break to the
-        # batch via __src, exactly the window's ordering. The hash
-        # agg does map-side partial combine and never sorts; the
-        # former row_number window sorted the full-payload union of
-        # state + batch on every merge (round 7; window kept behind
-        # SPARK_GRAFT_MERGE_WINNER=window for A/B).
-        w = F.struct(F.col("receiver_idx"), F.col("seq"), F.col("__src"))
-        if os.environ.get("SPARK_GRAFT_MERGE_WINNER", "agg") == "window":
-            from pyspark.sql import Window
-
-            win = Window.partitionBy(self.key).orderBy(w.desc())
-            winner = (
-                combined.withColumn("__rn", F.row_number().over(win))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn", "__src")
-            )
-        else:
-            val_cols = [c for c in combined.columns if c != self.key]
-            winner = (
-                combined.groupBy(self.key)
-                .agg(
-                    F.max_by(
-                        F.struct(*[F.col(c) for c in val_cols]), w
-                    ).alias("__w")
-                )
-                .select(
-                    self.key,
-                    *[F.col(f"__w.{c}").alias(c) for c in val_cols],
-                )
-                .drop("__src")
-            )
+        # winner per key: both sides are unique per key (state is
+        # resolved, the batch is pre-compacted), so each key holds <= 2
+        # rows and the max_by is deterministic — ties on (receiver_idx,
+        # seq) break to the batch via __src.
+        winner = last_event_per_key_agg(
+            combined,
+            keys=(self.key,),
+            order_cols=("receiver_idx", "seq", "__src"),
+        ).drop("__src")
         if self.delete_mode == "drop":
             new_rows = winner.filter(F.col("op") != "d").drop("op")
         else:

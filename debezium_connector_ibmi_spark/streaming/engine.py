@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from debezium_connector_ibmi_spark.config import EngineConfig
 from debezium_connector_ibmi_spark.pipeline import (
     STATE_COLUMNS,
+    compact_for_state,
     with_text,
 )
 from debezium_connector_ibmi_spark.plans.range_planner import (
@@ -51,27 +52,6 @@ from debezium_connector_ibmi_spark.sources.journal_source import read_journal
 # reverts from Observation conditional aggregates to its own job
 LINEAGE_OBSERVE_MAX_RECEIVERS = 64
 
-# compute the cow sink's touched-bucket set with a NARROW pre-pass
-# over the raw slice (key column only — payload columns never read)
-# instead of persisting the decoded batch and riding discovery on its
-# cache-fill action. DEFAULT False: measured round 7 (A/B, 3
-# interleaved rounds on the 4M-op bench journal, local[32]) the
-# persist+fill shape is both faster and far more stable —
-# persist+fill 8.2-10.8s total with every batch 1.9-3.3s, narrow
-# 11.2-32.9s with bimodal batches (2.2-3.3s normally, 8-12s GC/stall
-# spikes when the scan+decode+merge+write pipeline runs as one long
-# action). The theory for narrow (bucket set of the compacted batch
-# == bucket set of the filtered slice's raw keys, so a key-only scan
-# suffices and the decode pipeline executes exactly once, nothing
-# persisted) is sound, but one fused action serializes the Python
-# decode stage with the state read + window + bucket write inside a
-# single scheduling wave, and the measured tail is worse than the
-# cache-fill shape's extra materialization. Kept as a flag so the
-# A/B stays reproducible (tests/test_plan_shape.py pins result
-# equivalence of both shapes).
-TOUCHED_BUCKETS_NARROW = False
-
-
 def _mor_compact_due(cfg, target, n_done: int, stats: dict) -> bool:
     """Shared mor-compaction trigger (tailer loop + structured
     stream): fire when any bucket's outstanding delta count reached
@@ -91,13 +71,11 @@ def _mor_compact_due(cfg, target, n_done: int, stats: dict) -> bool:
 def _fill_cache_collect_touched(batch, target) -> list[int] | None:
     """Materialize a persisted cow batch (noop write) and ride the
     touched-bucket discovery on it as a map-side ``collect_set``
-    Observation — the default cow shape (one cache-fill action + one
-    merge-from-cache action per batch; see the
-    ``TOUCHED_BUCKETS_NARROW`` A/B note for why this beats the
-    single-action narrow-discovery variant). Driver state is bounded:
-    the set size is <= target.num_buckets. Returns None (sink falls
-    back to its own discovery) for custom targets or when the
-    metrics row is unavailable."""
+    Observation (one cache-fill action + one merge-from-cache action
+    per batch). Driver state is bounded: the set size is <=
+    target.num_buckets. Returns None (sink falls back to its own
+    discovery) for custom targets or when the metrics row is
+    unavailable."""
     if not (hasattr(target, "_bucket_col") and hasattr(target, "key")):
         return None  # custom target: let it do its own discovery
     from pyspark.sql import Observation
@@ -113,30 +91,6 @@ def _fill_cache_collect_touched(batch, target) -> list[int] | None:
     if m is None:
         return None
     return [int(b) for b in m["touched"]]
-
-
-def _touched_buckets_narrow(sliced, cfg, target) -> list[int] | None:
-    """Touched-bucket set from a key-column-only pass over the raw
-    slice (see the ``TOUCHED_BUCKETS_NARROW`` note): the compacted
-    batch's key set equals the filtered slice's key set, so the
-    discovery scan reads ONLY the key column (predicates stay pushed,
-    payload columns never leave the parquet footer stats) and the
-    distinct collapses map-side to <= num_buckets values per task.
-    Returns None for custom targets (sink does its own discovery)."""
-    if not (hasattr(target, "_bucket_col") and hasattr(target, "key")):
-        return None
-    from debezium_connector_ibmi_spark.functions.optype import op_type_col
-    from debezium_connector_ibmi_spark.operators.filters import (
-        apply_standard_filters,
-    )
-
-    keys = (
-        apply_standard_filters(sliced, cfg)
-        .where(op_type_col().isin("c", "u", "d"))
-        .select(target._bucket_col(F.col(target.key)).alias("b"))
-        .distinct()
-    )
-    return sorted(int(r["b"]) for r in keys.collect())
 
 
 def _observation_metrics(obs, timeout_s: float = 2.0) -> dict | None:
@@ -180,16 +134,38 @@ def _merge_columns() -> list[str]:
 def prepare_batch(journal_slice: DataFrame, cfg: EngineConfig) -> DataFrame:
     """filter -> op-map -> compact -> decode survivors.
 
-    Uses the state-path compaction (UB rows and before-image bytes
-    dropped BEFORE the shuffle — final state never reads them;
-    envelope/event consumers use pipeline.pair_and_compact /
-    decoded_events instead). compaction_mode="fused" = one window
-    pass; "salted" = two-phase skew-safe.
+    Uses the state-path compaction (``pipeline.compact_for_state``:
+    UB rows and before-image bytes dropped BEFORE the shuffle — final
+    state never reads them; event consumers use
+    ``pipeline.decoded_events`` instead).
     """
-    from debezium_connector_ibmi_spark.pipeline import compact_for_state
-
     last = compact_for_state(journal_slice, cfg)
     return with_text(last).select(*_merge_columns())
+
+
+def prepare_and_merge(
+    target, cfg: EngineConfig, observed: DataFrame, **merge_kwargs
+) -> dict:
+    """The per-batch apply sequence of the tailer and the structured
+    stream: prepare -> persist -> cache fill -> merge -> unpersist.
+
+    cow: the merge needs the touched-bucket set at PLAN time, so the
+    batch is persisted and the discovery rides its cache-fill action
+    (which also fires any Observation the caller attached to
+    ``observed``). mor: the sink's write IS its only action (touched
+    = written partition dirs), so caching would be pure overhead. The
+    batch is unpersisted even when the merge raises."""
+    batch = prepare_batch(observed, cfg)
+    if getattr(target, "write_mode", "cow") != "cow":
+        return target.merge(batch, **merge_kwargs)
+    batch = batch.persist()
+    try:
+        touched = _fill_cache_collect_touched(batch, target)
+        if touched is not None:
+            merge_kwargs["touched"] = touched
+        return target.merge(batch, **merge_kwargs)
+    finally:
+        batch.unpersist()
 
 
 def apply_schema_changes_for_slice(
@@ -427,35 +403,14 @@ class JournalTailer:
                 import shutil
 
                 shutil.rmtree(qpath, ignore_errors=True)
-        # cow: the merge needs the touched-bucket set at PLAN time.
-        # Default shape: persist the batch, ride discovery on the
-        # cache-fill action (measured fastest + most stable — see the
-        # TOUCHED_BUCKETS_NARROW note for the single-action A/B). The
-        # mor sink's write IS its only action — no discovery needed
-        # (touched = written partition dirs), caching pure overhead.
-        batch = prepare_batch(sliced_obs, self.cfg)
-        cache = (
-            getattr(self.target, "write_mode", "cow") == "cow"
-            and not TOUCHED_BUCKETS_NARROW
-        )
-        touched = None
-        if TOUCHED_BUCKETS_NARROW and (
-            getattr(self.target, "write_mode", "cow") == "cow"
-        ):
-            touched = _touched_buckets_narrow(sliced, self.cfg, self.target)
-        elif cache:
-            batch = batch.persist()
-            touched = _fill_cache_collect_touched(batch, self.target)
-        merge_kwargs = {} if touched is None else {"touched": touched}
-        stats = self.target.merge(
-            batch,
+        stats = prepare_and_merge(
+            self.target,
+            self.cfg,
+            sliced_obs,
             batch_id=batch_id,
             watermark=(rng.end.receiver_idx, rng.end.seq),
             partitions=lineage,  # callable: resolved after the write
-            **merge_kwargs,
         )
-        if cache:
-            batch.unpersist()
         if stats.get("skipped"):
             # fenced replay: nothing was applied (the cache-fill action
             # may have fired the observation, but the counts describe
@@ -777,11 +732,11 @@ def run_structured_stream(
         # T12 in streaming mode: schema events in this micro-batch
         # apply before its data merge, exactly once (version fence)
         apply_schema_changes_for_slice(target, cfg, evolution, df)
-        # the epoch's max position rides the merge's own first action
-        # as an Observation (same zero-extra-jobs trick as the
-        # tailer's _observe_lineage; resolved lazily by the sink AFTER
-        # its write actions, with an aggregation fallback if the
-        # metrics row is unavailable)
+        # the epoch's max position rides the batch's first action (the
+        # cow cache fill, or the mor write) as an Observation (same
+        # zero-extra-jobs trick as the tailer's _observe_lineage;
+        # resolved lazily by the sink AFTER its write actions, with an
+        # aggregation fallback if the metrics row is unavailable)
         from pyspark.sql import Observation
 
         obs = Observation()
@@ -789,24 +744,6 @@ def run_structured_stream(
             obs,
             F.max(F.struct(F.col("receiver_idx"), F.col("seq"))).alias("w"),
         )
-        # cow: same default persist+fill shape as the tailer (see the
-        # TOUCHED_BUCKETS_NARROW A/B note); the cache-fill action
-        # also fires the watermark Observation above (it sits below
-        # prepare_batch in the observed plan). The mor sink's single
-        # write action needs no discovery at all.
-        cache = (
-            getattr(target, "write_mode", "cow") == "cow"
-            and not TOUCHED_BUCKETS_NARROW
-        )
-        batch = prepare_batch(observed, cfg)
-        touched = None
-        if TOUCHED_BUCKETS_NARROW and (
-            getattr(target, "write_mode", "cow") == "cow"
-        ):
-            touched = _touched_buckets_narrow(df, cfg, target)
-        elif cache:
-            batch = batch.persist()
-            touched = _fill_cache_collect_touched(batch, target)
 
         def wm_provider():
             # bounded probe, never a blocking obs.get: a sink commit
@@ -831,16 +768,14 @@ def run_structured_stream(
         # mid-run would leave it ahead of unmerged entries and the
         # tailer would skip them. Stream restarts resume from the
         # Spark checkpoint, not the sink watermark.
-        merge_kwargs = {} if touched is None else {"touched": touched}
-        mstats = target.merge(
-            batch,
+        mstats = prepare_and_merge(
+            target,
+            cfg,
+            observed,
             batch_id=epoch_id,
             watermark=wm_provider,
             writer_id=_stream_writer_id(),
-            **merge_kwargs,
         )
-        if cache:
-            batch.unpersist()
         # mor housekeeping parity with run_to_head: delta-count
         # trigger preferred, batch cadence as fallback (epoch ids are
         # monotone, so the cadence holds across restarts too)

@@ -43,7 +43,10 @@ from debezium_connector_ibmi_spark.plans.range_planner import (
     usable_chain,
     validate_position,
 )
-from debezium_connector_ibmi_spark.streaming.engine import JournalTailer
+from debezium_connector_ibmi_spark.streaming.engine import (
+    JournalTailer,
+    _mor_compact_due,
+)
 
 
 class MultiTableTailer:
@@ -192,12 +195,14 @@ class MultiTableTailer:
                 }
             )
             n_ranges += 1
-            # mor housekeeping parity with JournalTailer.run_to_head
-            if (
-                self.cfg.mor_compact_every > 0
-                and n_ranges % self.cfg.mor_compact_every == 0
-            ):
-                for tl in self.tailers.values():
-                    if getattr(tl.target, "write_mode", "cow") == "mor":
-                        tl.target.compact()
+            # mor housekeeping parity with JournalTailer.run_to_head:
+            # the same delta-count / cadence trigger, per merged table
+            for table, tl in self.tailers.items():
+                res = results[table]
+                if not res.get("skipped") and _mor_compact_due(
+                    tl.cfg, tl.target, n_ranges, res
+                ):
+                    res["compacted"] = not tl.target.compact().get(
+                        "skipped", False
+                    )
         return out

@@ -18,8 +18,9 @@ from __future__ import annotations
 import sys
 import tempfile
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from debezium_connector_ibmi_spark.config import EngineConfig  # noqa: E402
 from debezium_connector_ibmi_spark.datagen.journal import (  # noqa: E402

@@ -51,7 +51,7 @@ spark = get_spark(app_name=f"scale-{cpus}", cores=cpus,
 cfg = EngineConfig(
     journal_path=journal, target_path=target,
     max_entries_per_batch=total_span // n_batches + 1,
-    num_buckets=32, salt_buckets=8,
+    num_buckets=32,
     journal_format=journal_format,
     merge_write_mode=merge_mode,
 )

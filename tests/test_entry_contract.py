@@ -5,11 +5,12 @@ the full sweep is scripts/check_oracles.py at sf0.01)."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entry  # noqa: E402
 from scripts.check_oracles import TABLES, norm_rows  # noqa: E402

@@ -50,7 +50,6 @@ def _cfg(journal_path, tmpdir, **kw):
         target_path=f"{tmpdir}/target",
         checkpoint_path=f"{tmpdir}/ckpt",
         num_buckets=8,
-        salt_buckets=4,
         merge_write_mode="mor",
         **kw,
     )

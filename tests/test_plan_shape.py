@@ -61,14 +61,14 @@ def test_partition_pruning_on_receiver_idx(spark, journal_path):
 def test_decode_udf_after_compaction(spark, journal_path):
     """current_state must run the Python UDF on compacted survivors:
     in the formatted plan the ArrowEvalPython node sits above the
-    window filter (rn=1), not below the shuffle."""
+    compaction aggregate, not below the shuffle."""
     import re
 
     j = read_journal(spark, journal_path)
     plan = _plan(current_state(j, EngineConfig()))
     # exactly one Python decode node (tree + details each mention it once)
     udf_ids = {int(m) for m in re.findall(r"ArrowEvalPython \((\d+)\)", plan)}
-    # compaction node: hash agg (default max_by mode) or window
+    # compaction node: the max_by aggregate
     comp_ids = {
         int(m)
         for pat in (r"HashAggregate \((\d+)\)", r"ObjectHashAggregate \((\d+)\)",
@@ -82,8 +82,7 @@ def test_decode_udf_after_compaction(spark, journal_path):
     assert min(udf_ids) > max(comp_ids), (
         "decode UDF must run after (above) compaction"
     )
-    # the default compaction is a hash agg with a partial (map-side)
-    # phase — no sort of the event payloads anywhere in the plan
+    # the compaction has a partial (map-side) phase
     assert "partial_max_by" in plan or "partial_max" in plan
 
 
@@ -113,9 +112,9 @@ def test_only_true_dimensions_force_broadcast(spark):
 
 def test_flagship_queries_use_max_by_agg(spark):
     """cdc_changelog_materialize / cdc_last_per_key must run the
-    engine's default compaction (max_by hash agg, map-side partial
-    combine) — no Window/sort of the event stream; the window variant
-    stays pinned via cdc_last_per_key_salted."""
+    engine's compaction (max_by with map-side partial combine) — no
+    Window over the event stream; the window variant stays pinned via
+    cdc_last_per_key_salted."""
     from debezium_connector_ibmi_spark.queries.cdc import (
         cdc_changelog_materialize,
         cdc_last_per_key,
@@ -336,56 +335,6 @@ def test_lineage_rides_merge_jobs(spark, tmpdir_path):
     assert key(lin_obs) == key(lin_fb)
     assert sum(s.get("events", 0) for s in out_obs) == sum(
         s.get("events", 0) for s in out_fb
-    )
-
-
-def test_touched_buckets_shapes_equivalent(spark, tmpdir_path):
-    """The cow sink's two touched-bucket discovery shapes — the
-    default persist + cache-fill collect_set Observation (round 5,
-    measured fastest/most stable in the round-7 A/B) and the
-    key-column-only narrow pre-pass (TOUCHED_BUCKETS_NARROW=True,
-    kept for the A/B) — produce IDENTICAL target state, watermark,
-    and lineage. The narrow run must also never persist the batch."""
-    from debezium_connector_ibmi_spark import streaming
-    from debezium_connector_ibmi_spark.streaming.engine import JournalTailer
-
-    jdir = f"{tmpdir_path}/j"
-    write_journal(spark, GEN, jdir, num_files=2)
-
-    def run(target_path, narrow):
-        orig = streaming.engine.TOUCHED_BUCKETS_NARROW
-        streaming.engine.TOUCHED_BUCKETS_NARROW = narrow
-        cfg = EngineConfig(
-            journal_path=jdir,
-            target_path=target_path,
-            num_buckets=4,
-            max_entries_per_batch=100,
-        )
-        tailer = JournalTailer(spark, cfg)
-        try:
-            out = tailer.run_to_head()
-        finally:
-            streaming.engine.TOUCHED_BUCKETS_NARROW = orig
-        rows = sorted(map(tuple, tailer.target.read().collect()))
-        return (
-            out, rows, tailer.target.watermark(), tailer.target.lineage(),
-        )
-
-    o1, r1, w1, l1 = run(f"{tmpdir_path}/t_fill", False)
-    o2, r2, w2, l2 = run(f"{tmpdir_path}/t_narrow", True)
-
-    n_batches = sum(1 for s in o1 if "events" in s)
-    assert n_batches >= 2
-    assert r1 == r2
-    assert w1 == w2
-    key = lambda rows: sorted(  # noqa: E731
-        (r["receiver_idx"], r["seq"], r["events_applied"]) for r in rows
-    )
-    assert key(l1) == key(l2)
-    # both modes computed real touched sets (buckets recorded in the
-    # merge commits)
-    assert all(
-        s.get("buckets_touched") for s in o2 if "events" in s
     )
 
 

@@ -41,9 +41,8 @@ def _assert_state_equal(engine: dict, oracle: dict, check_deleted=False):
         assert e["warc_ts"] == o["warc_ts"], url
 
 
-@pytest.mark.parametrize("mode", ["fused", "salted"])
-def test_full_replay_matches_oracle_drop_mode(spark, journal_df, mode):
-    cfg = EngineConfig(delete_mode="drop", compaction_mode=mode)
+def test_full_replay_matches_oracle_drop_mode(spark, journal_df):
+    cfg = EngineConfig(delete_mode="drop")
     state = current_state(journal_df, cfg)
     engine = state_df_to_dict(state)
     oracle = naive_replay([r.asDict() for r in journal_df.collect()], delete_mode="drop")
@@ -106,33 +105,3 @@ def test_pairing_attaches_before_images(spark, journal_df):
     assert n_with_before <= n_upd
     # UB rows never reach the event stream
     assert ev.filter(F.col("op") == "b").count() == 0
-
-
-def test_pair_and_compact_equals_staged_path(spark, journal_df):
-    """The fused pair+compact (envelope consumers) must agree with the
-    staged pair->salted-compact path on both the winning rows and
-    their attached before-images."""
-    from debezium_connector_ibmi_spark.pipeline import (
-        compact_batch,
-        decoded_events,
-        pair_and_compact,
-    )
-
-    cfg = EngineConfig()
-    fused = pair_and_compact(journal_df, cfg)
-    staged = compact_batch(decoded_events(journal_df, cfg), cfg)
-    cols = ["url", "receiver_idx", "seq", "op", "before_html", "html"]
-
-    def key(rows):
-        return {
-            (r["url"]): (
-                r["receiver_idx"],
-                r["seq"],
-                r["op"],
-                bytes(r["before_html"]) if r["before_html"] is not None else None,
-                bytes(r["html"]) if r["html"] is not None else None,
-            )
-            for r in rows
-        }
-
-    assert key(fused.select(*cols).collect()) == key(staged.select(*cols).collect())

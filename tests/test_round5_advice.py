@@ -7,6 +7,7 @@ binding.
 from __future__ import annotations
 
 import time
+from pathlib import Path
 
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
@@ -182,7 +183,9 @@ def test_registry_rotation_freshness_invariant():
         all_queries,
     )
 
-    prev = json.load(open("/root/repo/CORRECTNESS_r06.json"))
+    prev = json.loads(
+        (Path(__file__).resolve().parents[1] / "CORRECTNESS_r06.json").read_text()
+    )
     green_prev = {
         k
         for k, v in prev.items()

@@ -41,7 +41,6 @@ def _cfg(journal_path, tmpdir, **kw):
         target_path=f"{tmpdir}/target",
         checkpoint_path=f"{tmpdir}/ckpt",
         num_buckets=8,
-        salt_buckets=4,
         **kw,
     )
 
@@ -173,3 +172,21 @@ def test_rewrite_mode_keeps_tombstones(spark, journal_path, tmpdir_path):
     got = {r["url"]: r["__deleted"] for r in df.collect()}
     want = {k: v["__deleted"] for k, v in oracle.items()}
     assert got == want
+
+
+def test_failed_merge_releases_persisted_batch(spark, journal_path, tmpdir_path):
+    """A merge that raises (e.g. cancelled by the watchdog, whose
+    recovery is the next iteration) must not leave the batch it
+    persisted for the cache fill cached for the rest of the session."""
+
+    class FailingTarget(KeyBucketedTarget):
+        def merge(self, batch, *args, **kwargs):
+            raise RuntimeError("merge failed")
+
+    cfg = _cfg(journal_path, tmpdir_path)
+    target = FailingTarget(spark, cfg.target_path, key="url", num_buckets=8)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    with pytest.raises(RuntimeError, match="merge failed"):
+        JournalTailer(spark, cfg, target=target).run_to_head()
+    assert persistent().size() == before

@@ -222,3 +222,42 @@ def test_fanout_table_ahead_skips(spark, tmpdir_path):
             mt.target(table).read().drop("bucket", "receiver_idx", "seq")
         )
         assert set(eng) == set(oracle), table
+
+
+def test_fanout_mor_delta_count_trigger(spark, tmpdir_path):
+    """A mor fan-out configured with the delta-count trigger alone
+    (no batch cadence) compacts each table whose pending per-bucket
+    delta depth reaches the threshold, exactly as the single-table
+    tailer does, and every table still folds to the oracle."""
+    jdir = f"{tmpdir_path}/j"
+    _two_table_journal(spark, GEN).write.mode("overwrite").partitionBy(
+        "receiver_idx"
+    ).parquet(jdir)
+    cfg = EngineConfig(
+        journal_path=jdir,
+        target_path=f"{tmpdir_path}/root",
+        table_include_list=("PAGES", "LINKS"),
+        num_buckets=4,
+        max_entries_per_batch=300,
+        merge_write_mode="mor",
+        mor_compact_max_deltas=2,
+        mor_compact_every=0,
+    )
+    mt = MultiTableTailer(spark, cfg)
+    out = mt.run_to_head()
+    assert len(out) >= 3
+    rows = [r.asDict() for r in spark.read.parquet(jdir).collect()]
+    for table in ("PAGES", "LINKS"):
+        c = mt.target(table).last_commit()
+        pending = max(
+            (len(v) for v in (c.get("deltas") or {}).values()), default=0
+        )
+        assert pending < 2, (table, pending)
+        assert any(it["tables"][table].get("compacted") for it in out), table
+        oracle = naive_replay(rows, include_tables=(table,))
+        eng = state_df_to_dict(
+            mt.target(table).read().drop("bucket", "receiver_idx", "seq")
+        )
+        assert set(eng) == set(oracle), table
+        for url, o in oracle.items():
+            assert eng[url]["html"] == o["html"], (table, url)
