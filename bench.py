@@ -402,9 +402,8 @@ def main():
                 "cdc_events_per_sec_mor": mor_eps,
                 # canonical protocol stamp: rounds are comparable IFF
                 # these match (r1 ran 1M ops — see BASELINE.md; r2+
-                # pin 4M). The 2->8-core scaling run is the separate
-                # pinned 16M protocol (scripts/bench_scaling.py),
-                # recorded per round in BASELINE.md.
+                # pin 4M). The 2->8-core scaling runs are recorded
+                # per round in BASELINE.md.
                 "bench_ops": BENCH_OPS,
                 "protocol": "v2: headline sf0.1 + 4M-op apply, local[32]"
                 " + 10x-docs top-5 block",

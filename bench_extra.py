@@ -3,12 +3,12 @@
 ``bench.py`` is FROZEN for measurement; this file hosts the extra
 instrumentation guide §1 calls for: per-query isolation with the same
 count()/noop methodology bench.py uses, repeat support, job labels,
-and optional sub-blocks (10x corpora, apply path). Usage:
+and optional sub-blocks (10x corpora). The CDC apply path is measured
+by ``perfbench/run.py``. Usage:
 
   python bench_extra.py q doc_dup_spans doc_substring_dedup   # sf0.1
   python bench_extra.py q10 doc_dup_spans                     # 10x docs
   python bench_extra.py emb10 emb_semantic_dedup              # 10x vecs
-  python bench_extra.py apply [cow|mor|binary]                # CDC apply
   REPEAT=3 python bench_extra.py q ...
 
 Prints one line per (query, repeat): name, seconds, rows.
@@ -94,9 +94,6 @@ def main():
     if mode == "cal":
         print(f"calibration_sec: {calibrate(spark):.3f}", flush=True)
         return
-    if mode == "apply":
-        run_apply(spark, names[0] if names else "cow")
-        return
 
     sf = SF_DIR
     work = None
@@ -133,65 +130,6 @@ def main():
         ld = os.environ.get("SPARK_GRAFT_LOCAL_DIR", "")
         if ld.startswith("/dev/shm/"):
             shutil.rmtree(ld, ignore_errors=True)
-
-
-def run_apply(spark, variant: str):
-    """The bench.py CDC-apply block, one variant at a time."""
-    from debezium_connector_ibmi_spark.config import EngineConfig
-    from debezium_connector_ibmi_spark.datagen.journal import (
-        JournalGenConfig,
-        write_journal,
-    )
-    from debezium_connector_ibmi_spark.streaming.engine import JournalTailer
-
-    ops = int(os.environ.get("SPARK_GRAFT_BENCH_OPS", "4000000"))
-    work = tempfile.mkdtemp(prefix="ibmi_benchx_apply_")
-    try:
-        gen = JournalGenConfig(
-            n_urls=max(1000, ops // 20),
-            n_ops=ops,
-            txn_size=500,
-            receiver_rotation=ops // 8 or 1,
-            skew=2.0,
-        )
-        write_journal(spark, gen, f"{work}/journal", num_files=CPUS * 2)
-        jpath = f"{work}/journal"
-        fmt = "columnar"
-        if variant == "binary":
-            from debezium_connector_ibmi_spark.sources.journal_source import (
-                read_journal,
-                write_binary_journal,
-            )
-
-            write_binary_journal(
-                read_journal(spark, jpath),
-                f"{work}/journal_bin",
-                num_files=CPUS * 2,
-            )
-            jpath, fmt = f"{work}/journal_bin", "binary"
-        for r in range(REPEAT):
-            cfg = EngineConfig(
-                journal_path=jpath,
-                target_path=f"{work}/target_{r}",
-                max_entries_per_batch=(ops * 6) // 4 + 1,
-                num_buckets=CPUS,
-                journal_format=fmt,
-                merge_write_mode="mor" if variant == "mor" else "cow",
-            )
-            tailer = JournalTailer(spark, cfg)
-            spark.sparkContext.setJobDescription(f"apply/{variant}#{r}")
-            t0 = time.time()
-            stats = tailer.run_to_head()
-            secs = time.time() - t0
-            n = sum(s.get("events", 0) for s in stats)
-            line = f"apply/{variant}#{r}: {secs:.3f}s ({n} events, {n / secs:.0f}/s)"
-            if variant == "mor":
-                t0 = time.time()
-                tailer.target.compact()
-                line += f" +compact {time.time() - t0:.3f}s"
-            print(line, flush=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -31,7 +31,6 @@ class EngineConfig:
     journal_path: str = ""
     target_path: str = ""
     checkpoint_path: str = ""
-    lineage_path: str = ""
 
     table_include_list: tuple[str, ...] = ("PAGES",)
     key_column: str = "url"
@@ -53,19 +52,13 @@ class EngineConfig:
     #        (one Spark job per batch, no current-state read); readers
     #        resolve by position, compact() folds deltas into a base
     merge_write_mode: str = "cow"
-    # mor housekeeping: auto-compact after this many merged batches
-    # (0 = never). Batch cadence is a blunt instrument — batches vary
-    # in size and bucket spread; prefer mor_compact_max_deltas, which
-    # triggers on the quantity that actually bounds read
-    # amplification. Ignored in cow mode.
-    mor_compact_every: int = 0
-    # mor housekeeping (round-6, VERDICT r5 #4): compact when any
-    # bucket's OUTSTANDING DELTA COUNT reaches this threshold (0 =
-    # never). Read cost grows linearly with per-bucket delta depth
-    # (see BASELINE.md read-amplification table: ~+12%/delta at
-    # sf-bench shape), so this caps read() wall directly regardless
-    # of batch sizing. Free to evaluate: the depth rides the commit's
-    # deltas map, no extra IO. Both triggers may be set; either fires.
+    # mor housekeeping: compact when any bucket's OUTSTANDING DELTA
+    # COUNT reaches this threshold (0 = never). Read cost grows
+    # linearly with per-bucket delta depth (see BASELINE.md
+    # read-amplification table: ~+12%/delta at sf-bench shape), so
+    # this caps read() wall directly regardless of batch sizing. Free
+    # to evaluate: the depth rides the commit's deltas map, no extra
+    # IO. Ignored in cow mode.
     mor_compact_max_deltas: int = 0
 
     # Debezium ``snapshot.mode`` analogue (reference config surface:
@@ -91,11 +84,6 @@ class EngineConfig:
     # table for forensics (the reference dumps failed decodes to
     # files, RetrieveJournal.java:294-348)
     quarantine_enabled: bool = False
-    # journal codes/types accepted (F2: RetrievalCriteria JRNCDE/ENTTYP)
-    journal_codes: tuple[str, ...] = ("R", "C", "D", "J")
-    entry_types: tuple[str, ...] = (
-        "PT", "PX", "UP", "UB", "DL", "DR", "SC", "CM", "CT", "CG",
-    )
 
     extra: dict = field(default_factory=dict)
 

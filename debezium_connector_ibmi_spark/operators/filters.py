@@ -16,6 +16,11 @@ from pyspark.sql import functions as F
 
 from debezium_connector_ibmi_spark.config import EngineConfig
 
+# journal codes/types accepted (F2: the reference's fixed required
+# sets, RetrievalCriteria JRNCDE/ENTTYP, RetrieveJournal.java:38-42)
+JOURNAL_CODES = ("R", "C", "D", "J")
+ENTRY_TYPES = ("PT", "PX", "UP", "UB", "DL", "DR", "SC", "CM", "CT", "CG")
+
 # journal codes that always pass regardless of table include list
 # (reference: J and C entries bypass the table filter,
 # As400StreamingChangeEventSource.java:205-213)
@@ -34,8 +39,8 @@ def apply_standard_filters(journal: DataFrame, cfg: EngineConfig) -> DataFrame:
     """
     code = F.col("journal_code")
     keep = (
-        code.isin(*cfg.journal_codes)
-        & F.col("entry_type").isin(*cfg.entry_types)
+        code.isin(*JOURNAL_CODES)
+        & F.col("entry_type").isin(*ENTRY_TYPES)
         & ~(code.isin("F"))
         & (
             code.isin(*_ALWAYS_PASS_CODES)

@@ -42,12 +42,8 @@ Scale shape (the 100 TB plan — round-7 rewrite, VERDICT r6 #1):
   coverage travels as merged SPANS (struct(start, end)), not
   exploded positions: shuffle bytes and the per-token membership
   probe scale with span count, not span length;
-- grams travel as full strings by default so the semantics are
-  exact and the DuckDB oracle can replay them; ``gram_key="hash"``
-  swaps the aggregation/join key to ``xxhash64(gram)`` (64-bit,
-  ~n^2/2^65 collision odds) to cut stats-exchange and broadcast
-  bytes ~6x at 10^10+ windows — the plan is otherwise identical
-  and equality is pinned by tests.
+- grams travel as full strings, so the semantics are exact and the
+  DuckDB oracle can replay them.
 
 Reference analogue: none (the connector has no text dedup); this is
 a first-class training-pipeline operator per the project brief.
@@ -55,22 +51,10 @@ a first-class training-pipeline operator per the project brief.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 DEFAULT_K = 8
-
-# deployment-scale knobs (local defaults; see module docstring):
-# stats_join: "broadcast" (dup-gram stats fit executor memory — map-
-# side probe, zero exchange of the site relation) | "shuffle" (stats
-# outgrow memory; AQE skew-splits the hot-gram join residual).
-# gram_key: "string" (exact, oracle-replayable) | "hash" (xxhash64
-# keys, ~6x smaller stats/broadcast at equal results modulo 2^-65
-# collisions).
-DEFAULT_STATS_JOIN = os.environ.get("SPARK_GRAFT_SD_STATS_JOIN", "broadcast")
-DEFAULT_GRAM_KEY = os.environ.get("SPARK_GRAFT_SD_GRAM_KEY", "string")
 
 
 def window_sites(
@@ -111,25 +95,18 @@ def window_sites(
     )
 
 
-def _gram_stats_for(
-    sites: DataFrame, min_sites: int, gram_key: str
-) -> tuple[DataFrame, Column]:
-    """(dup-gram stats relation keyed by ``__gk``, probe-side key
-    expression). ONE map-side combining hash agg: count + min site
-    per gram, filtered to duplicated grams."""
-    if gram_key == "hash":
-        key = F.xxhash64(F.col("gram"))
-    else:
-        key = F.col("gram")
-    stats = (
-        sites.groupBy(key.alias("__gk"))
+def _gram_stats_for(sites: DataFrame, min_sites: int) -> DataFrame:
+    """Dup-gram stats relation keyed by ``__gk``: ONE map-side
+    combining hash agg of count + min site per gram, filtered to
+    duplicated grams."""
+    return (
+        sites.groupBy(F.col("gram").alias("__gk"))
         .agg(
             F.count(F.lit(1)).alias("n_sites"),
             F.min(F.struct("doc_id", "pos")).alias("_first"),
         )
         .where(F.col("n_sites") >= min_sites)
     )
-    return stats, key
 
 
 def dup_window_sites(
@@ -138,8 +115,7 @@ def dup_window_sites(
     min_sites: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    stats_join: str | None = None,
-    gram_key: str | None = None,
+    stats_join: str = "broadcast",
 ) -> DataFrame:
     """Sites whose gram occurs at >= min_sites sites corpus-wide:
     (doc_id, pos, n_sites, is_first_site). ``is_first_site`` marks
@@ -156,14 +132,12 @@ def dup_window_sites(
     probe branch) — both builds are embarrassingly parallel map
     stages, which is the trade that removes the former full-site
     window exchange and its single-task hot-gram buffer."""
-    stats_join = stats_join or DEFAULT_STATS_JOIN
-    gram_key = gram_key or DEFAULT_GRAM_KEY
     sites = window_sites(df, k, id_col, text_col)
-    stats, key = _gram_stats_for(sites, min_sites, gram_key)
+    stats = _gram_stats_for(sites, min_sites)
     if stats_join == "broadcast":
         stats = F.broadcast(stats)
     return (
-        sites.join(stats, key == F.col("__gk"))
+        sites.join(stats, F.col("gram") == F.col("__gk"))
         .select(
             "doc_id",
             "pos",
@@ -400,7 +374,7 @@ def dup_window_sites_incremental(
     min_sites: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    stats_join: str | None = None,
+    stats_join: str = "broadcast",
 ) -> DataFrame:
     """Batch sites duplicated against corpus-index + batch-internal
     occurrences: (doc_id, pos, n_sites, is_first_site). n_sites is
@@ -414,7 +388,6 @@ def dup_window_sites_incremental(
     batch's site rows are never shuffled; the enriched stats then
     join back to the sites (broadcast by default, same
     ``stats_join`` trade as detection)."""
-    stats_join = stats_join or DEFAULT_STATS_JOIN
     sites = window_sites(batch, k, id_col, text_col)
     bstats = sites.groupBy("gram").agg(
         F.count(F.lit(1)).alias("_n_b"),

@@ -218,23 +218,6 @@ def chunk_tokens(
     )
 
 
-def minhash_columns(
-    text: Column | str = "text", seeds: tuple[str, ...] = ("s0", "s1", "s2", "s3"),
-    n: int = 3,
-) -> dict[str, Column]:
-    """MinHash signature: min(md5(seed||shingle)) per seed.
-
-    Prefer :func:`with_minhash` in pipelines — it hashes each shingle
-    ONCE and slices the digest (one-hash minhash), ~4x cheaper."""
-    sh = shingles(text, n)
-    return {
-        f"minhash_{i}": F.array_min(
-            F.transform(sh, lambda s: F.md5(F.concat(F.lit(seed), s)))
-        )
-        for i, seed in enumerate(seeds)
-    }
-
-
 def with_minhash(
     df: DataFrame,
     text: str = "text",

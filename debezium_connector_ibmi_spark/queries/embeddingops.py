@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from debezium_connector_ibmi_spark.session import spread
+
 _N_QUERIES = 10
 _TOP_K = 5
 
@@ -23,28 +25,12 @@ def _emb(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
-def _emb_par(spark, sf_dir):
-    """Embeddings spread over the default parallelism: the testdata
-    table is one single-row-group parquet file, so any per-vector map
-    stage (norms, sign codes, centroid argmax, brute-force pair
-    scoring against broadcast queries) serializes on ONE core until
-    its first exchange. Same rationale as queries/textops._docs_par.
-    """
-    return _emb(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
-
-
 def _dot(a, b):
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-
-
-def _cosine(a, b):
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
 def _norm(v):
@@ -65,7 +51,7 @@ def _cosine_n(a, b, na, nb):
 
 # --- brute-force cosine top-k (the correctness baseline) -----------------
 def emb_knn_brute_force(spark, sf_dir):
-    e = _emb_par(spark, sf_dir)
+    e = spread(_emb(spark, sf_dir))
     q = e.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qv"),
@@ -114,7 +100,7 @@ def _bucket(col):
 
 
 def emb_ann_lsh_bucket(spark, sf_dir):
-    e = _emb_par(spark, sf_dir).withColumn(
+    e = spread(_emb(spark, sf_dir)).withColumn(
         "bucket", _bucket(F.col("embedding"))
     )
     q = e.filter(F.col("vec_id") < _N_QUERIES).select(
@@ -189,7 +175,7 @@ def emb_cosine_near_dup_pairs(spark, sf_dir):
     """Near-dup detection on embeddings: candidate pairs from the
     sign-LSH bucket join, verified by cosine >= threshold. Integer
     output columns only (ids), so the oracle hash is float-safe."""
-    e = _emb_par(spark, sf_dir).withColumn(
+    e = spread(_emb(spark, sf_dir)).withColumn(
         "bucket", _bucket(F.col("embedding"))
     )
     a = e.select(
@@ -309,7 +295,7 @@ def emb_ivf_topk(spark, sf_dir):
     search each query only in its own cell (nprobe=1), rank by
     cosine. Deterministic quantizer (see _ivf_assign_cells) so the
     DuckDB oracle reproduces assignment + ranking exactly."""
-    assigned = _ivf_assign_cells(_emb_par(spark, sf_dir))
+    assigned = _ivf_assign_cells(spread(_emb(spark, sf_dir)))
     q = assigned.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qv"),
@@ -354,7 +340,7 @@ def emb_ivf_topk_nprobe2(spark, sf_dir):
     two nearest cells (the database side stays single-cell), trading
     2× candidate volume for recall. Same deterministic quantizer, so
     the oracle reproduces it."""
-    e = _emb_par(spark, sf_dir)
+    e = spread(_emb(spark, sf_dir))
     db = _ivf_assign_cells(e)
     q = (
         _ivf_assign_cells(e, nprobe=2)
@@ -548,7 +534,7 @@ def emb_semantic_dedup(spark, sf_dir):
     )
 
     out = semantic_dedup(
-        _emb_par(spark, sf_dir),
+        spread(_emb(spark, sf_dir)),
         id_col="vec_id",
         vec_col="embedding",
         threshold=_NEAR_DUP_COS,

@@ -11,27 +11,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from debezium_connector_ibmi_spark.operators import text_analysis as ta
+from debezium_connector_ibmi_spark.session import spread
 
 
 def _docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _docs_par(spark, sf_dir):
-    """documents, spread across the default parallelism: the testdata
-    table is ONE single-row-group parquet file, so the whole scan is
-    ONE split (maxPartitionBytes cannot split inside a row group) and
-    every map-heavy stage (md5-per-shingle signatures, gram builds,
-    BPE merges) serializes on one core until its first exchange. One
-    tiny round-robin shuffle of the 5k-doc relation buys 32x map
-    parallelism; at real scale the input has >= cores partitions and
-    this becomes a no-op-sized rebalance of file-split metadata.
-    Used by every query whose dominant cost is per-doc map work
-    (round 7 — previously only the substring-dedup family did this).
-    """
-    return _docs(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
 
 
 _STOPWORDS = ta.DEFAULT_STOPWORDS
@@ -69,7 +53,7 @@ def doc_token_count_bpe_merged(spark, sf_dir):
     cross-pinned by tests/test_bpe_merges.py parity against an
     independent rank-order reference implementation. The pre-merge
     proxy (``doc_token_count_bpe``) stays the map-only fast path."""
-    return _docs_par(spark, sf_dir).select(
+    return spread(_docs(spark, sf_dir)).select(
         "doc_id",
         ta.bpe_token_count().alias("n_tokens_pre"),
         ta.merged_bpe_token_count_udf()(F.col("text")).alias(
@@ -116,7 +100,7 @@ def doc_winnow_fingerprints(spark, sf_dir):
     """Winnowing (MOSS) rolling-hash fingerprints: one row per
     (doc_id, distinct window-min k-gram hash). Map-only codegen +
     bounded explode (~tokens/w rows per doc)."""
-    return _docs_par(spark, sf_dir).select(
+    return spread(_docs(spark, sf_dir)).select(
         "doc_id",
         F.explode(ta.winnow_fingerprints("text", k=3, w=4)).alias("fp"),
     )
@@ -163,7 +147,7 @@ _MINHASH_SQL = """
 def doc_lsh_near_dup_pairs(spark, sf_dir):
     return (
         ta.lsh_candidate_pairs(
-            _docs_par(spark, sf_dir), id_col="doc_id", seeds=_SEEDS,
+            spread(_docs(spark, sf_dir)), id_col="doc_id", seeds=_SEEDS,
             n=_N_SHINGLE,
         )
         .withColumnRenamed("id_a", "doc_a")
@@ -194,7 +178,7 @@ def _dup_edges(spark, sf_dir):
     star edges (min-id -> other ids per identical fingerprint, same
     components as all-pairs at linear edge count) UNION the verified
     near-dup pairs (banded LSH -> exact Jaccard)."""
-    docs = _docs_par(spark, sf_dir)
+    docs = spread(_docs(spark, sf_dir))
     fp = docs.select("doc_id", ta.fingerprint().alias("fp"))
     # min-per-fp via hash agg (map-side partial) + equi-join — NOT a
     # Window over fp partitions: a boilerplate text owning 5% of the
@@ -251,7 +235,7 @@ def doc_near_dup_verified(spark, sf_dir):
     tests/test_plan_shape.py)."""
     return (
         ta.lsh_verified_near_dups(
-            _docs_par(spark, sf_dir),
+            spread(_docs(spark, sf_dir)),
             id_col="doc_id",
             seeds=_SEEDS,
             n=_N_SHINGLE,
@@ -293,14 +277,8 @@ def doc_stream_near_dup_verified(spark, sf_dir):
         f"{src}/documents.parquet",
     )
     # spread the single-file micro-batch before the signature map
-    # stage (the md5-per-shingle pass otherwise runs on ONE task; the
-    # round-robin exchange moves raw text once, same rationale as
-    # _docs_par) — the stateful groupBy re-shuffles by band anyway
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .parquet(src)
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    # stage — the stateful groupBy re-shuffles by band anyway
+    stream = spread(spark.readStream.schema(docs.schema).parquet(src))
     ck = tempfile.mkdtemp(prefix="ndsv_ck_")
     name = f"ndsv_{ck.rsplit('_', 1)[-1]}"
     q = (
@@ -318,7 +296,7 @@ def doc_stream_near_dup_verified(spark, sf_dir):
     # endpoints (round-6, VERDICT r5 #6) instead of once per branch
     return verify_flags(
         flags,
-        sets=corpus_shingle_sets(_docs_par(spark, sf_dir)),
+        sets=corpus_shingle_sets(spread(_docs(spark, sf_dir))),
         threshold_num=3,
         threshold_den=10,
     )
@@ -1002,7 +980,7 @@ def doc_dup_spans(spark, sf_dir):
     inclusive bounds): the corpus-wide exact-substring map. One
     site-relation build, one gram-keyed shuffle (count/min window),
     then per-doc gaps-and-islands merge."""
-    return sd.dup_spans(_docs_par(spark, sf_dir), k=_SPAN_K)
+    return sd.dup_spans(spread(_docs(spark, sf_dir)), k=_SPAN_K)
 
 
 def doc_dup_spans_incremental(spark, sf_dir):
@@ -1013,7 +991,7 @@ def doc_dup_spans_incremental(spark, sf_dir):
     WITHOUT re-windowing the corpus. The oracle exploits the pinned
     contract: incremental(B, index(C)) == batch operator over C∪B
     restricted to B's docs."""
-    docs = _docs_par(spark, sf_dir)
+    docs = spread(_docs(spark, sf_dir))
     from pyspark.sql import functions as F
 
     batch = docs.where(F.col("doc_id") % 4 == 0)
@@ -1027,7 +1005,7 @@ def doc_substring_dedup(spark, sf_dir):
     """Keep-one-copy substring dedup: each duplicated passage
     survives only at its globally-first (doc_id, pos) site; later
     occurrences are excised token-wise and the text re-joined."""
-    return sd.remove_dup_spans(_docs_par(spark, sf_dir), k=_SPAN_K).select(
+    return sd.remove_dup_spans(spread(_docs(spark, sf_dir)), k=_SPAN_K).select(
         "doc_id", "dedup_text"
     )
 

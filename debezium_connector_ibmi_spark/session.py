@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -55,11 +55,9 @@ def get_spark(
         # too few tasks to feed 32 cores (13 tasks on a 1.6GB journal
         # measured); 32MB keeps scan parallelism >= cores at bench
         # scale while staying coarse enough at 100TB (where file
-        # count, not split size, sets parallelism)
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(32 * 1024 * 1024)),
-        )
+        # count, not split size, sets parallelism); override it via
+        # ``extra_conf``
+        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
         # receiver-chain discovery = min/max(seq) grouped by the
         # partition column: answerable from parquet footer stats
         # (Iceberg answers it from manifests)
@@ -92,3 +90,21 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """``df`` round-robin repartitioned across the session's default
+    parallelism, for relations whose dominant cost is per-row map work
+    (md5-per-shingle signatures, gram builds, BPE merges, per-vector
+    norms and sign codes). The testdata tables are ONE
+    single-row-group parquet file each, so their scan is ONE split
+    (maxPartitionBytes cannot split inside a row group) and every map
+    stage before the first exchange would run on one core.
+
+    The spread is unconditional, and it is not free: ``repartition(n)``
+    plans a RoundRobin Exchange that shuffles every row, so an input
+    already split into >= cores partitions pays one extra full
+    shuffle for nothing. (Asking ``df.rdd.getNumPartitions()`` first
+    costs a planning pass per call.) Works on streaming DataFrames
+    too."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)

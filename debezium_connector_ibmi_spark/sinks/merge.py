@@ -107,10 +107,26 @@ class KeyBucketedTarget:
 
     def last_commit(self) -> dict | None:
         v = self._latest_version()
-        if v < 0:
-            return None
-        with open(f"{self.path}/_commits/{v}.json") as fh:
-            return json.load(fh)
+        return None if v < 0 else self.commit_at(v)
+
+    def _commit_metadata(self, **meta) -> None:
+        """Metadata-only commit: the latest commit (or an empty
+        table's skeleton) carried forward with ``meta`` applied."""
+        last = self.last_commit() or {
+            "batch_id": -1,
+            "buckets": {},
+            "watermark": None,
+            "schema_version": -1,
+        }
+        self._write_commit(
+            {
+                **last,
+                "version": self._latest_version() + 1,
+                "partitions": [],  # lineage rows belong to merge commits only
+                "ts": time.time(),
+                **meta,
+            }
+        )
 
     def _write_commit(self, commit: dict) -> None:
         v = commit["version"]
@@ -133,8 +149,7 @@ class KeyBucketedTarget:
         epoch_id) can never silently skip each other's batches."""
         for v in range(self._latest_version(), -1, -1):
             try:
-                with open(f"{self.path}/_commits/{v}.json") as fh:
-                    c = json.load(fh)
+                c = self.commit_at(v)
             except FileNotFoundError:
                 continue
             if c.get("writer_id") == writer_id:
@@ -147,23 +162,9 @@ class KeyBucketedTarget:
         the writer id. Returns False if already recorded."""
         if batch_id <= self.last_writer_batch_id(writer_id):
             return False
-        last = self.last_commit() or {
-            "version": -1,
-            "batch_id": -1,
-            "buckets": {},
-            "watermark": None,
-            "schema_version": -1,
-        }
-        commit = {
-            **last,
-            "version": self._latest_version() + 1,
-            "partitions": [],  # lineage rows belong to merge commits only
-            "ts": time.time(),
-            "kind": "writer_progress",
-            "writer_id": writer_id,
-            "writer_batch_id": batch_id,
-        }
-        self._write_commit(commit)
+        self._commit_metadata(
+            kind="writer_progress", writer_id=writer_id, writer_batch_id=batch_id
+        )
         return True
 
     def schema_version(self) -> int:
@@ -207,23 +208,7 @@ class KeyBucketedTarget:
         TABLE analogue). No-op if a schema is already declared."""
         if self.declared_schema() is not None:
             return
-        last = self.last_commit() or {
-            "version": -1,
-            "batch_id": -1,
-            "buckets": {},
-            "watermark": None,
-            "partitions": [],
-            "schema_version": -1,
-        }
-        commit = {
-            **last,
-            "version": self._latest_version() + 1,
-            "partitions": [],  # lineage rows belong to merge commits only
-            "ts": time.time(),
-            "kind": "declare",
-            "schema": [list(x) for x in schema],
-        }
-        self._write_commit(commit)
+        self._commit_metadata(kind="declare", schema=[list(x) for x in schema])
 
     def update_schema(self, transform, version: int) -> None:
         """Apply a schema change (T12, the Iceberg ALTER TABLE
@@ -234,14 +219,7 @@ class KeyBucketedTarget:
         merge."""
         if version <= self.schema_version():
             return
-        last = self.last_commit() or {
-            "version": -1,
-            "batch_id": -1,
-            "buckets": {},
-            "watermark": None,
-            "partitions": [],
-        }
-        new_version = self._latest_version() + 1
+        last = self.last_commit() or {}
         decl = self.declared_schema()
         has_data = bool(last.get("buckets") or last.get("deltas"))
         if decl is None and not has_data:
@@ -254,21 +232,40 @@ class KeyBucketedTarget:
         else:
             current = self._schema_df()
         new_state = transform(current)
-        new_decl = [[f.name, f.dataType.simpleString()] for f in new_state.schema.fields]
-        commit = {
-            **last,
-            "version": new_version,
-            "partitions": [],  # lineage rows belong to merge commits only
-            "ts": time.time(),
+        meta = {
             "kind": "schema_change",
             "schema_version": version,
-            "schema": new_decl,
+            "schema": [
+                [f.name, f.dataType.simpleString()]
+                for f in new_state.schema.fields
+            ],
         }
         if has_data:
-            written = self._write_buckets(new_state, new_version)
-            commit["buckets"] = {str(b): new_version for b in written}
-            commit["deltas"] = {}  # folded into the rewritten base
-        self._write_commit(commit)
+            self._rewrite_base(last, new_state, **meta)
+        else:
+            self._commit_metadata(**meta)
+
+    def _rewrite_base(self, last: dict, state: DataFrame, **meta) -> tuple[int, list[int]]:
+        """Write ``state`` as the whole base of ONE new version and
+        commit it over ``last``'s metadata (fences, watermarks and
+        schema carry forward; pending deltas fold into the new base);
+        ``meta`` sets ``kind`` and any other commit fields. Crash-safe
+        like every write: the ``_latest`` flip is last. Returns the new
+        version and the buckets written."""
+        version = self._latest_version() + 1
+        written = self._write_buckets(state, version)
+        self._write_commit(
+            {
+                **last,
+                "version": version,
+                "buckets": {str(b): version for b in written},
+                "deltas": {},
+                "partitions": [],  # lineage rows belong to merge commits only
+                "ts": time.time(),
+                **meta,
+            }
+        )
+        return version, written
 
     def watermark(self, writer_id: str | None = None) -> tuple[int, int]:
         """(receiver_idx, seq) high-watermark of applied changes.
@@ -323,11 +320,9 @@ class KeyBucketedTarget:
             }
             for r, s in sorted(self._lineage_summary().items(), key=lambda kv: int(kv[0]))
         ]
-        v = self._latest_version()
-        for i in range(v + 1):
+        for i in range(self._latest_version() + 1):
             try:
-                with open(f"{self.path}/_commits/{i}.json") as fh:
-                    c = json.load(fh)
+                c = self.commit_at(i)
             except FileNotFoundError:
                 continue
             for p in c.get("partitions", []):
@@ -527,19 +522,9 @@ class KeyBucketedTarget:
         )
         if spread_before < min_versions and n_deltas == 0:
             return {"skipped": True, "spread": spread_before}
-        state = self.read().drop("bucket")
-        version = self._latest_version() + 1
-        written = self._write_buckets(state, version)
-        commit = {
-            **last,
-            "version": version,
-            "buckets": {str(b): version for b in written},
-            "deltas": {},  # folded into the new base
-            "partitions": [],  # lineage rows belong to merge commits only
-            "ts": time.time(),
-            "kind": "rewrite",
-        }
-        self._write_commit(commit)
+        version, written = self._rewrite_base(
+            last, self.read().drop("bucket"), kind="rewrite"
+        )
         return {
             "skipped": False,
             "version": version,
@@ -571,19 +556,9 @@ class KeyBucketedTarget:
         old_num = self.num_buckets
         state = self.read().drop("bucket")
         self.num_buckets = new_num_buckets
-        version = self._latest_version() + 1
-        written = self._write_buckets(state, version)
-        commit = {
-            **last,
-            "version": version,
-            "buckets": {str(b): version for b in written},
-            "deltas": {},  # folded into the rescaled base
-            "partitions": [],  # lineage rows belong to merge commits only
-            "ts": time.time(),
-            "kind": "rescale",
-            "num_buckets": new_num_buckets,
-        }
-        self._write_commit(commit)
+        version, _ = self._rewrite_base(
+            last, state, kind="rescale", num_buckets=new_num_buckets
+        )
         return {
             "rescaled": True,
             "from_buckets": old_num,

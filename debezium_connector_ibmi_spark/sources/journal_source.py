@@ -113,29 +113,20 @@ def to_binary_journal(journal: DataFrame) -> DataFrame:
     )
 
 
-def from_binary_journal(
-    binary_journal: DataFrame, use_udf: bool = False
-) -> DataFrame:
+def from_binary_journal(binary_journal: DataFrame) -> DataFrame:
     """Inverse of :func:`to_binary_journal`: header decode
     reconstructing the standard journal columns; the rest of the
     engine runs unchanged on the result.
 
-    Default decode is the pure-Catalyst expression path
+    The decode is the pure-Catalyst expression path
     (``decode_header_cols``: substring/hex/conv inside whole-stage
-    codegen — no Arrow transfer of the blobs). ``use_udf=True``
-    switches to the vectorized numpy ``frombuffer`` pandas UDF (the
-    columnar EntryHeaderDecoder) — equality of the two is pinned in
-    tests."""
+    codegen — no Arrow transfer of the blobs)."""
     from debezium_connector_ibmi_spark.functions.decode import split_object_name
     from debezium_connector_ibmi_spark.functions.header_codec import (
         decode_header_cols,
-        decode_header_udf,
     )
 
-    decode = decode_header_udf("header_blob") if use_udf else decode_header_cols(
-        F.col("header_blob")
-    )
-    d = binary_journal.withColumn("h", decode)
+    d = binary_journal.withColumn("h", decode_header_cols(F.col("header_blob")))
     # the top-level seq column (when the layout carries it) keeps
     # planner predicates scan-side; the blob's sequence still decodes
     # and is asserted equal in tests (C1 round-trip)

@@ -52,20 +52,16 @@ from debezium_connector_ibmi_spark.sources.journal_source import read_journal
 # reverts from Observation conditional aggregates to its own job
 LINEAGE_OBSERVE_MAX_RECEIVERS = 64
 
-def _mor_compact_due(cfg, target, n_done: int, stats: dict) -> bool:
-    """Shared mor-compaction trigger (tailer loop + structured
-    stream): fire when any bucket's outstanding delta count reached
+def _mor_compact_due(cfg, target, stats: dict) -> bool:
+    """Shared mor-compaction trigger (tailer loop, structured stream,
+    fan-out): fire when any bucket's outstanding delta count reached
     ``mor_compact_max_deltas`` (the quantity that actually bounds read
-    amplification — rides the commit's deltas map for free), or on the
-    ``mor_compact_every`` batch cadence as the blunt fallback."""
-    if getattr(target, "write_mode", "cow") != "mor":
-        return False
-    if (
-        cfg.mor_compact_max_deltas > 0
+    amplification — rides the commit's deltas map for free)."""
+    return (
+        getattr(target, "write_mode", "cow") == "mor"
+        and cfg.mor_compact_max_deltas > 0
         and stats.get("max_bucket_deltas", 0) >= cfg.mor_compact_max_deltas
-    ):
-        return True
-    return cfg.mor_compact_every > 0 and n_done % cfg.mor_compact_every == 0
+    )
 
 
 def _fill_cache_collect_touched(batch, target) -> list[int] | None:
@@ -551,10 +547,9 @@ class JournalTailer:
                 raise
             n_ranges += 1
             # mor housekeeping: bound read amplification by folding
-            # deltas into a base — delta-count trigger preferred,
-            # batch cadence as fallback (maintenance commit — no
+            # deltas into a base (maintenance commit — no
             # fence/watermark movement, crash-safe)
-            if _mor_compact_due(self.cfg, self.target, n_ranges, out[-1]):
+            if _mor_compact_due(self.cfg, self.target, out[-1]):
                 out[-1]["compacted"] = not self.target.compact().get(
                     "skipped", False
                 )
@@ -776,10 +771,8 @@ def run_structured_stream(
             watermark=wm_provider,
             writer_id=_stream_writer_id(),
         )
-        # mor housekeeping parity with run_to_head: delta-count
-        # trigger preferred, batch cadence as fallback (epoch ids are
-        # monotone, so the cadence holds across restarts too)
-        if _mor_compact_due(cfg, target, epoch_id + 1, mstats):
+        # mor housekeeping parity with run_to_head
+        if _mor_compact_due(cfg, target, mstats):
             target.compact()
 
     stream = read_journal_stream(

@@ -196,11 +196,11 @@ class MultiTableTailer:
             )
             n_ranges += 1
             # mor housekeeping parity with JournalTailer.run_to_head:
-            # the same delta-count / cadence trigger, per merged table
+            # the same delta-count trigger, per merged table
             for table, tl in self.tailers.items():
                 res = results[table]
                 if not res.get("skipped") and _mor_compact_due(
-                    tl.cfg, tl.target, n_ranges, res
+                    tl.cfg, tl.target, res
                 ):
                     res["compacted"] = not tl.target.compact().get(
                         "skipped", False

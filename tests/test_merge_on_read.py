@@ -44,6 +44,30 @@ def oracle(spark, journal_path):
     return naive_replay(rows)
 
 
+@pytest.fixture(scope="module")
+def tailed_150(spark, journal_path, tmp_path_factory):
+    """The same journal tailed to head in batches of 150 entries, once
+    per write mode, each run under its own Spark job group. Shared by
+    the tests that compare the two modes' state and their job counts,
+    which need the identical pair of runs."""
+    root = str(tmp_path_factory.mktemp("tailed_150"))
+    sc = spark.sparkContext
+    runs = {}
+    for mode in ("mor", "cow"):
+        cfg = replace(
+            _cfg(journal_path, f"{root}/{mode}", max_entries_per_batch=150),
+            merge_write_mode=mode,
+        )
+        group = f"g-{mode}5"
+        sc.setJobGroup(group, group)
+        try:
+            out = JournalTailer(spark, cfg).run_to_head()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        runs[mode] = (cfg, out, len(sc.statusTracker().getJobIdsForGroup(group)))
+    return runs
+
+
 def _cfg(journal_path, tmpdir, **kw):
     return EngineConfig(
         journal_path=journal_path,
@@ -76,20 +100,12 @@ def _assert_matches_oracle(engine, oracle):
         assert e["lang"] == o["lang"], url
 
 
-def test_mor_tail_matches_oracle_and_cow(
-    spark, journal_path, oracle, tmpdir_path
-):
+def test_mor_tail_matches_oracle_and_cow(spark, oracle, tailed_150):
     """Same journal, many small batches, mor vs cow: identical final
     state (the read-time resolution equals the cow write-time merge),
     identical watermark, and the oracle replay."""
-    cfg_mor = _cfg(journal_path, f"{tmpdir_path}/mor",
-                   max_entries_per_batch=150)
-    cfg_cow = replace(
-        _cfg(journal_path, f"{tmpdir_path}/cow", max_entries_per_batch=150),
-        merge_write_mode="cow",
-    )
-    out_mor = JournalTailer(spark, cfg_mor).run_to_head()
-    out_cow = JournalTailer(spark, cfg_cow).run_to_head()
+    cfg_mor, out_mor, _ = tailed_150["mor"]
+    cfg_cow, out_cow, _ = tailed_150["cow"]
     assert len(out_mor) == len(out_cow) >= 4
     s_mor, s_cow = _state(spark, cfg_mor), _state(spark, cfg_cow)
     _assert_matches_oracle(s_mor, oracle)
@@ -218,26 +234,13 @@ def test_mor_expire_keeps_live_delta_versions(
     _assert_matches_oracle(before, oracle)
 
 
-def test_mor_single_job_per_batch(spark, journal_path, tmpdir_path):
+def test_mor_single_job_per_batch(tailed_150):
     """The motivation: a mor tailer batch runs FEWER Spark jobs than a
     cow batch — the bucket-discovery aggregation (2 jobs under AQE) is
     gone; only the delta write remains (mirror of the round-4 lineage
     jobs test)."""
-    sc = spark.sparkContext
-
-    def run(mode, group):
-        cfg = _cfg(f"{journal_path}", f"{tmpdir_path}/{group}",
-                   max_entries_per_batch=150)
-        cfg = replace(cfg, merge_write_mode=mode)
-        sc.setJobGroup(group, group)
-        try:
-            out = JournalTailer(spark, cfg).run_to_head()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-    out_mor, jobs_mor = run("mor", "g-mor5")
-    out_cow, jobs_cow = run("cow", "g-cow5")
+    _, out_mor, jobs_mor = tailed_150["mor"]
+    _, _, jobs_cow = tailed_150["cow"]
     n_batches = sum(1 for s in out_mor if "events" in s)
     assert n_batches >= 4
     # cow pays >= 2 extra jobs per batch (AQE shuffle + result stage
@@ -276,27 +279,6 @@ def test_cow_merge_consumes_pending_deltas(spark, tmpdir_path):
         )
     got = {r["url"]: r["v"] for r in t_cow.read().collect()}
     assert got == {"a": "2", "b": "1"}
-
-
-def test_mor_auto_compaction_bounds_deltas(spark, journal_path, oracle, tmpdir_path):
-    """cfg.mor_compact_every folds deltas into a base every K merged
-    batches — pending deltas per bucket stay bounded by K and the
-    final state still matches the oracle."""
-    cfg = replace(
-        _cfg(journal_path, tmpdir_path, max_entries_per_batch=150),
-        mor_compact_every=3,
-    )
-    out = JournalTailer(spark, cfg).run_to_head()
-    n_batches = sum(1 for s in out if "events" in s)
-    assert n_batches >= 6
-    assert any(s.get("compacted") for s in out)
-    t = _target(spark, cfg)
-    c = t.last_commit()
-    pending = max(
-        (len(v) for v in (c.get("deltas") or {}).values()), default=0
-    )
-    assert pending < 3 + 1, f"deltas unbounded: {pending}"
-    _assert_matches_oracle(_state(spark, cfg), oracle)
 
 
 def test_mor_schema_evolution_mid_deltas(spark, tmpdir_path):
@@ -407,28 +389,6 @@ def test_mor_random_batch_equivalence(spark, tmpdir_path, seed, delete_mode):
     assert snap(t_cow) == snap(t_mor), "diverged after compaction"
 
 
-def test_mor_stream_auto_compaction(spark, journal_path, oracle, tmpdir_path):
-    """Streaming parity for mor housekeeping: with mor_compact_every
-    set, epochs fold deltas on cadence — pending deltas stay bounded
-    and the final state still matches the oracle."""
-    from debezium_connector_ibmi_spark.streaming.engine import (
-        run_structured_stream,
-    )
-
-    cfg = replace(
-        _cfg(journal_path, f"{tmpdir_path}/sc", max_entries_per_batch=200),
-        mor_compact_every=1,
-    )
-    q = run_structured_stream(spark, cfg, available_now=True)
-    q.awaitTermination(timeout=300)
-    t = _target(spark, cfg)
-    c = t.last_commit()
-    assert c["buckets"], "compaction wrote a base"
-    pending = sum(len(v) for v in (c.get("deltas") or {}).values())
-    assert pending == 0, f"cadence=1 must leave no pending deltas: {pending}"
-    _assert_matches_oracle(_state(spark, cfg), oracle)
-
-
 def test_mor_read_resolution_plan_shape(spark, tmpdir_path):
     """Scale contract of the mor read path: base+delta resolution is a
     single partial-combining max_by aggregation — exactly ONE shuffle
@@ -469,10 +429,9 @@ def test_mor_read_resolution_plan_shape(spark, tmpdir_path):
 def test_mor_delta_count_trigger(spark, journal_path, oracle, tmpdir_path):
     """Round-6 (VERDICT r5 #4): mor_compact_max_deltas triggers
     compaction on OUTSTANDING DELTAS PER BUCKET — the quantity that
-    bounds read amplification — not on batch cadence. With the
-    threshold at 2 and no cadence configured, no bucket's pending
-    delta depth may ever exceed 2, and the final state still matches
-    the oracle."""
+    bounds read amplification. With the threshold at 2, no bucket's
+    pending delta depth may ever exceed 2, and the final state still
+    matches the oracle."""
     cfg = replace(
         _cfg(journal_path, tmpdir_path, max_entries_per_batch=150),
         mor_compact_max_deltas=2,

@@ -15,11 +15,10 @@
 
 from __future__ import annotations
 
-import re
-
 import pytest
 
 from debezium_connector_ibmi_spark.sinks.merge import KeyBucketedTarget
+from test_iceberg_binding import FakeBatch, FakeIcebergSession
 
 
 def _batch(spark, rows, ddl="url string, receiver_idx int, seq long, op string, text string"):
@@ -220,110 +219,11 @@ def test_compact_rewrites_to_single_version(spark, tmpdir_path):
 # ---------------------------------------------------------------- 2+6. Iceberg parity
 
 
-class _FakeConf:
-    def __init__(self):
-        self.store = {}
-
-    def get(self, key, default=None):
-        if key.startswith("spark.sql.catalog."):
-            return "org.apache.iceberg.spark.SparkCatalog"
-        return self.store.get(key, default)
-
-    def set(self, key, value):
-        self.store[key] = value
-
-
-class _FakeField:
-    def __init__(self, name, dtype):
-        self.name = name
-        self._dtype = dtype
-        self.dataType = self
-
-    def simpleString(self):
-        return self._dtype
-
-
-class _FakeTable:
-    def __init__(self, fields):
-        self.schema = self
-
-    # set in __init__ via trick below
-
-
-class _FakeResult:
-    def __init__(self, rows):
-        self._rows = rows
-
-    def collect(self):
-        return self._rows
-
-
-class FakeIcebergSession:
-    """Executes the sink's SQL surface against an in-memory property
-    store + schema, so the writer-fence LOGIC (not the Iceberg engine)
-    is testable without jars. Every statement text still comes from
-    the pinned pure builders."""
-
-    def __init__(self, columns=(("url", "string"), ("text", "string"))):
-        self.conf = _FakeConf()
-        self.props: dict[str, str] = {}
-        self.merges: list[str] = []
-        self.statements: list[str] = []
-        self.columns = [list(c) for c in columns]
-
-    def sql(self, stmt: str):
-        self.statements.append(stmt)
-        if stmt.startswith("SHOW TBLPROPERTIES"):
-            prop = re.search(r"\('([^']+)'\)", stmt).group(1)
-            if prop in self.props:
-                return _FakeResult([{"value": self.props[prop]}])
-            return _FakeResult([])
-        if "SET TBLPROPERTIES" in stmt:
-            for k, v in re.findall(r"'([^']+)'='([^']*)'", stmt):
-                self.props[k] = v
-            return _FakeResult([])
-        if stmt.startswith("MERGE INTO"):
-            self.merges.append(stmt)
-            return _FakeResult([])
-        m = re.match(r"ALTER TABLE \S+ ADD COLUMN (\S+) (\S+)", stmt)
-        if m:
-            if any(c[0] == m.group(1) for c in self.columns):
-                raise RuntimeError(f"column {m.group(1)} already exists")
-            self.columns.append([m.group(1), m.group(2)])
-            return _FakeResult([])
-        m = re.match(r"ALTER TABLE \S+ DROP COLUMN (\S+)", stmt)
-        if m:
-            if not any(c[0] == m.group(1) for c in self.columns):
-                raise RuntimeError(f"missing column {m.group(1)}")
-            self.columns = [c for c in self.columns if c[0] != m.group(1)]
-            return _FakeResult([])
-        m = re.match(r"ALTER TABLE \S+ ALTER COLUMN (\S+) TYPE (\S+)", stmt)
-        if m:
-            for c in self.columns:
-                if c[0] == m.group(1):
-                    c[1] = m.group(2)
-            return _FakeResult([])
-        if stmt.startswith("CREATE TABLE"):
-            return _FakeResult([])
-        raise AssertionError(f"unexpected SQL: {stmt}")
-
-    def table(self, name):
-        t = _FakeTable.__new__(_FakeTable)
-        t.schema = t
-        t.fields = [_FakeField(n, d) for n, d in self.columns]
-        return t
-
-
-class _FakeBatch:
-    def createOrReplaceTempView(self, name):
-        pass
-
-
 def _mixed_scenario(target):
     """The same mixed tail/stream sequence for both sinks; returns the
     observed (skipped, effective_batch_id) pattern."""
     out = []
-    b = _FakeBatch() if isinstance(target, _IceWrap) else target._mk()
+    b = FakeBatch() if isinstance(target, _IceWrap) else target._mk()
     for batch_id, writer in [
         (0, None),  # tailer 0
         (1, None),  # tailer 1

@@ -37,6 +37,7 @@ from debezium_connector_ibmi_spark.sources.incremental import (
 from debezium_connector_ibmi_spark.streaming.engine import JournalTailer
 from debezium_connector_ibmi_spark.streaming.fanout import MultiTableTailer
 from debezium_connector_ibmi_spark.testing import state_df_to_dict
+from test_iceberg_binding import FakeBatch, FakeIcebergSession
 
 GEN = JournalGenConfig(n_urls=40, n_ops=400, txn_size=20, receiver_rotation=100)
 
@@ -297,79 +298,33 @@ def test_fanout_schema_events_do_not_cross_tables(spark, tmpdir_path):
 # -- 4. low: Iceberg writer watermark is monotone ----------------------
 
 
-class _FakePropsSession:
-    """Minimal SparkSession stand-in that executes only the property
-    statements IcebergTarget emits (ALTER ... SET TBLPROPERTIES /
-    SHOW TBLPROPERTIES) against an in-memory store and swallows the
-    MERGE — enough to exercise the fence logic without Iceberg jars."""
-
-    def __init__(self):
-        import types
-
-        self.props: dict[str, str] = {}
-        self.sqls: list[str] = []
-        self.conf = types.SimpleNamespace(set=lambda *a, **k: None)
-
-    def sql(self, stmt: str):
-        import re
-
-        self.sqls.append(stmt)
-        m = re.match(r"ALTER TABLE \S+ SET TBLPROPERTIES \((.*)\)", stmt)
-        if m:
-            for kv in re.finditer(r"'([^']+)'='([^']*)'", m.group(1)):
-                self.props[kv.group(1)] = kv.group(2)
-            return None
-        m = re.match(r"SHOW TBLPROPERTIES \S+ \('([^']+)'\)", stmt)
-        if m:
-
-            class _Res:
-                def __init__(self, rows):
-                    self._rows = rows
-
-                def collect(self):
-                    return self._rows
-
-            k = m.group(1)
-            if k in self.props:
-                return _Res([{"value": self.props[k]}])
-            return _Res([])
-        if stmt.startswith("MERGE INTO"):
-            return None
-        raise AssertionError(f"unexpected sql: {stmt}")
-
-
-class _FakeBatch:
-    def createOrReplaceTempView(self, name):
-        pass
-
-
 def test_iceberg_writer_watermark_monotone():
     from debezium_connector_ibmi_spark.sinks.iceberg import IcebergTarget
 
     t = IcebergTarget.__new__(IcebergTarget)
-    t.spark = _FakePropsSession()
+    t.spark = FakeIcebergSession()
     t.table = "cat.db.state"
     t.key = "url"
     t.num_buckets = 8
     t.delete_mode = "drop"
 
-    t.merge(_FakeBatch(), batch_id=0, watermark=(2, 500), writer_id="s1")
+    t.merge(FakeBatch(), batch_id=0, watermark=(2, 500), writer_id="s1")
     assert t.watermark("s1") == (2, 500)
     # out-of-order epoch carries an OLDER position: must not regress
-    t.merge(_FakeBatch(), batch_id=1, watermark=(1, 900), writer_id="s1")
+    t.merge(FakeBatch(), batch_id=1, watermark=(1, 900), writer_id="s1")
     assert t.watermark("s1") == (2, 500)
     # newer position advances
-    t.merge(_FakeBatch(), batch_id=2, watermark=(3, 1), writer_id="s1")
+    t.merge(FakeBatch(), batch_id=2, watermark=(3, 1), writer_id="s1")
     assert t.watermark("s1") == (3, 1)
     # parity check against the parquet sink's semantics: replay of an
     # already-fenced epoch is skipped entirely (fence lookup only — no
     # MERGE, no property write)
     n_writes = sum(
-        1 for s in t.spark.sqls if not s.startswith("SHOW")
+        1 for s in t.spark.statements if not s.startswith("SHOW")
     )
-    assert t.merge(_FakeBatch(), batch_id=1, writer_id="s1")["skipped"]
+    assert t.merge(FakeBatch(), batch_id=1, writer_id="s1")["skipped"]
     assert (
-        sum(1 for s in t.spark.sqls if not s.startswith("SHOW")) == n_writes
+        sum(1 for s in t.spark.statements if not s.startswith("SHOW")) == n_writes
     )
 
 

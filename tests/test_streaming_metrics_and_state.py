@@ -21,6 +21,29 @@ from debezium_connector_ibmi_spark.streaming.metrics_stream import (
 GEN = JournalGenConfig(n_urls=25, n_ops=300, txn_size=20, receiver_rotation=60)
 
 
+def _await_drained(q, timeout_s=300):
+    """Wait until an availableNow query has consumed all its input,
+    then stop it. A ProcessingTimeTimeout stateful operator keeps
+    Spark scheduling no-data batches (to fire timeouts), so such a
+    query never terminates on its own; the first batch that reads zero
+    rows marks the input drained, because no-data batches only run
+    once the available files are exhausted."""
+    import time
+
+    deadline = time.time() + timeout_s
+    try:
+        while q.isActive and time.time() < deadline:
+            p = q.lastProgress
+            if p is not None and p["numInputRows"] == 0:
+                break
+            time.sleep(0.2)
+        else:
+            assert not q.isActive, f"input not drained in {timeout_s}s"
+        assert q.exception() is None, q.exception()
+    finally:
+        q.stop()
+
+
 def test_windowed_op_counts(spark, tmpdir_path):
     j = generate_journal(spark, GEN)
     j.write.mode("overwrite").parquet(f"{tmpdir_path}/j")
@@ -176,7 +199,7 @@ def test_stateful_pairing_across_batches(spark, tmpdir_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout=300)
+    _await_drained(q)
     got = spark.sql("SELECT * FROM paired")
 
     # oracle: batch pairing over the whole journal (order-global)

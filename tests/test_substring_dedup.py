@@ -143,36 +143,6 @@ def test_detection_site_relation_never_shuffled(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_gram_key_hash_equals_string(spark):
-    """``gram_key="hash"`` (xxhash64 stats/join keys — the 10^10+
-    windows shuffle-byte cut promised by the module docstring) yields
-    identical results to the exact string keys."""
-    docs = _docs(
-        spark,
-        [
-            _toks(30, "a"),
-            _toks(30, "a"),  # full dup
-            _toks(12, "b") + " " + _toks(8, "a"),
-            _toks(25, "c"),
-        ],
-    )
-    for fn in (
-        lambda d, **kw: sd.dup_spans(d, k=4),
-        lambda d, **kw: sd.remove_dup_spans(d, k=4),
-    ):
-        import debezium_connector_ibmi_spark.operators.substring_dedup as m
-
-        old = m.DEFAULT_GRAM_KEY
-        try:
-            m.DEFAULT_GRAM_KEY = "string"
-            a = sorted(map(tuple, fn(docs).collect()))
-            m.DEFAULT_GRAM_KEY = "hash"
-            b = sorted(map(tuple, fn(docs).collect()))
-        finally:
-            m.DEFAULT_GRAM_KEY = old
-        assert a == b
-
-
 def test_stats_join_shuffle_equals_broadcast(spark):
     """``stats_join="shuffle"`` (the dup-gram-stats-outgrow-memory
     regime) yields identical results to the broadcast default."""

@@ -225,8 +225,7 @@ def test_fanout_table_ahead_skips(spark, tmpdir_path):
 
 
 def test_fanout_mor_delta_count_trigger(spark, tmpdir_path):
-    """A mor fan-out configured with the delta-count trigger alone
-    (no batch cadence) compacts each table whose pending per-bucket
+    """A mor fan-out configured with the delta-count trigger compacts each table whose pending per-bucket
     delta depth reaches the threshold, exactly as the single-table
     tailer does, and every table still folds to the oracle."""
     jdir = f"{tmpdir_path}/j"
@@ -241,7 +240,6 @@ def test_fanout_mor_delta_count_trigger(spark, tmpdir_path):
         max_entries_per_batch=300,
         merge_write_mode="mor",
         mor_compact_max_deltas=2,
-        mor_compact_every=0,
     )
     mt = MultiTableTailer(spark, cfg)
     out = mt.run_to_head()
