@@ -16,13 +16,29 @@ Two write strategies share one commit/fence layer (constructor
 the batch touches (partition-pruned read of the current state), while
 merge-on-read appends the batch as immutable per-bucket DELTA files —
 one Spark job per batch, resolved per key at read time and folded
-back into a base by ``compact()``. Every commit records the
-bucket->version map (plus pending delta versions), ``batch_id`` and
-per-partition high-watermarks, and flips the pointer last. Replayed
-batches (same or older ``batch_id``) are detected at the fence and
-skipped — the exactly-once upgrade over the reference's at-least-once
-Kafka emit (As400OffsetContext.java:109-129; data-loss note
-README.md:366-369).
+back into a base by ``compact()``. Every write flips the pointer
+last. Replayed batches (same or older ``batch_id``) are detected at
+the fence and skipped — the exactly-once upgrade over the reference's
+at-least-once Kafka emit (As400OffsetContext.java:109-129; data-loss
+note README.md:366-369).
+
+The latest commit is the sink's whole state (the reference's one
+offset map; Iceberg's current snapshot): every commit carries the
+full table state forward, so each lookup reads one file and
+``expire_versions`` loses nothing but time travel. One commit holds:
+
+    version, kind, ts         this commit
+    buckets                   bucket -> base data version
+    deltas                    bucket -> pending merge-on-read versions
+    num_buckets, schema,      table layout and declared schema
+      schema_version
+    batch_id                  global batch counter (tailer fence)
+    writer_batch_ids          writer_id -> last batch id (writer fences)
+    watermark                 tailer-domain (receiver_idx, seq)
+    writer_watermarks         writer_id -> (receiver_idx, seq)
+    applied                   receiver_idx -> [max seq, events applied],
+                              rolled up over every merge so far
+    partitions                this merge's own lineage rows (FIXTURES §3)
 
 On a real cluster the identical interface binds to Iceberg
 (``merge`` -> SQL MERGE INTO + snapshot-property fence); the manifest
@@ -96,6 +112,18 @@ class KeyBucketedTarget:
         if c is not None and "num_buckets" in c:
             self.num_buckets = int(c["num_buckets"])
 
+    @classmethod
+    def for_config(cls, spark: SparkSession, cfg) -> KeyBucketedTarget:
+        """The target an ``EngineConfig`` pipeline writes."""
+        return cls(
+            spark,
+            cfg.target_path,
+            key=cfg.key_column,
+            num_buckets=cfg.num_buckets,
+            delete_mode=cfg.delete_mode,
+            write_mode=cfg.merge_write_mode,
+        )
+
     # ---- commit bookkeeping -----------------------------------------
 
     def _latest_version(self) -> int:
@@ -141,30 +169,26 @@ class KeyBucketedTarget:
         c = self.last_commit()
         return -1 if c is None else int(c.get("batch_id", -1))
 
+    def _writer_batch_ids(self) -> dict:
+        return dict((self.last_commit() or {}).get("writer_batch_ids") or {})
+
     def last_writer_batch_id(self, writer_id: str) -> int:
-        """Highest writer-domain batch id committed by ``writer_id``
-        (walks commits newest-first). The sink's global ``batch_id``
-        is one monotone counter; writer ids namespace the REPLAY
-        fence so two id domains (tailer counter vs streaming
-        epoch_id) can never silently skip each other's batches."""
-        for v in range(self._latest_version(), -1, -1):
-            try:
-                c = self.commit_at(v)
-            except FileNotFoundError:
-                continue
-            if c.get("writer_id") == writer_id:
-                return int(c.get("writer_batch_id", -1))
-        return -1
+        """Highest writer-domain batch id committed by ``writer_id``.
+        The sink's global ``batch_id`` is one monotone counter; writer
+        ids namespace the REPLAY fence so two id domains (tailer
+        counter vs streaming epoch_id) can never silently skip each
+        other's batches."""
+        return int(self._writer_batch_ids().get(writer_id, -1))
 
     def record_writer_progress(self, writer_id: str, batch_id: int) -> bool:
         """Advance a writer's fence WITHOUT data (e.g. a signal that
-        was inspected and ignored): a metadata-only commit carrying
-        the writer id. Returns False if already recorded."""
-        if batch_id <= self.last_writer_batch_id(writer_id):
+        was inspected and ignored): a metadata-only commit. Returns
+        False if already recorded."""
+        fences = self._writer_batch_ids()
+        if batch_id <= fences.get(writer_id, -1):
             return False
-        self._commit_metadata(
-            kind="writer_progress", writer_id=writer_id, writer_batch_id=batch_id
-        )
+        fences[writer_id] = batch_id
+        self._commit_metadata(kind="writer_progress", writer_batch_ids=fences)
         return True
 
     def schema_version(self) -> int:
@@ -292,42 +316,22 @@ class KeyBucketedTarget:
             return (-1, -1)
         return (int(w[0]), int(w[1]))
 
-    def _lineage_summary(self) -> dict:
-        """Compacted per-receiver lineage rolled forward by
-        ``expire_versions`` (receiver_idx -> {seq, events_applied});
-        empty until a vacuum has expired merge commits."""
-        try:
-            with open(f"{self.path}/_commits/_lineage_summary.json") as fh:
-                return json.load(fh)
-        except FileNotFoundError:
-            return {}
-
     def lineage(self) -> list[dict]:
-        """Per-partition lineage rows: the compacted summary of
-        expired commits (so applied watermarks survive vacuuming —
-        without it, receivers whose last activity predates retention
-        would look unapplied and lag would be over-reported) plus the
-        retained commits' rows (FIXTURES §3)."""
-        rows = [
+        """Applied lineage, one row per receiver: the highest applied
+        seq and the events applied over every merge so far, from the
+        latest commit's ``applied`` roll-up (so it survives
+        ``expire_versions``). Each merge commit's own per-batch rows
+        stay in its ``partitions`` list (FIXTURES §3)."""
+        applied = (self.last_commit() or {}).get("applied") or {}
+        return [
             {
                 "receiver_idx": int(r),
-                "seq": int(s["seq"]),
-                "events_applied": int(s.get("events_applied", 0)),
+                "seq": int(seq),
+                "events_applied": int(n),
                 "processed": True,
-                "batch_id": None,
-                "version": None,
-                "compacted": True,
             }
-            for r, s in sorted(self._lineage_summary().items(), key=lambda kv: int(kv[0]))
+            for r, (seq, n) in sorted(applied.items(), key=lambda kv: int(kv[0]))
         ]
-        for i in range(self._latest_version() + 1):
-            try:
-                c = self.commit_at(i)
-            except FileNotFoundError:
-                continue
-            for p in c.get("partitions", []):
-                rows.append({**p, "batch_id": c.get("batch_id"), "version": i})
-        return rows
 
     # ---- data access --------------------------------------------------
 
@@ -428,10 +432,8 @@ class KeyBucketedTarget:
         keeps its old data version alive through the retained bucket
         maps — only truly unreferenced versions are removed, so
         ``read()`` (and ``read(version=...)`` within retention) stay
-        valid. Retention caveat: a writer fence older than the
-        retained window re-bases on next use (writer_batch_id walks
-        retained commits only) — safe, because replays past the fence
-        are row-level idempotent by position. Returns counts for
+        valid. Fences, watermarks and lineage live in the latest
+        commit, so they survive any expiry. Returns counts for
         observability."""
         import shutil
 
@@ -441,42 +443,17 @@ class KeyBucketedTarget:
         keep_from = max(0, latest - keep_last + 1)
         referenced: set[int] = set()
         kept = removed_commits = 0
-        # roll per-receiver applied watermarks of the commits about to
-        # expire into the compacted summary FIRST, so lineage() (and
-        # lag_metrics) stay truthful after the vacuum
-        summary = self._lineage_summary()
-        for v in range(keep_from):
+        for v in range(keep_from, latest + 1):
             try:
                 c = self.commit_at(v)
             except FileNotFoundError:
                 continue
-            for p in c.get("partitions", []):
-                r = str(int(p["receiver_idx"]))
-                prev = summary.get(r)
-                ev = int(p.get("events_applied", 0))
-                if prev is None:
-                    summary[r] = {"seq": int(p["seq"]), "events_applied": ev}
-                else:
-                    prev["seq"] = max(int(prev["seq"]), int(p["seq"]))
-                    prev["events_applied"] = int(prev["events_applied"]) + ev
-        tmp = f"{self.path}/_commits/_lineage_summary.tmp"
-        with open(tmp, "w") as fh:
-            json.dump(summary, fh)
-        os.replace(tmp, f"{self.path}/_commits/_lineage_summary.json")
-        for v in range(latest + 1):
-            try:
-                c = self.commit_at(v)
-            except FileNotFoundError:
-                continue
-            if v >= keep_from:
-                kept += 1
-                referenced.update(int(x) for x in c.get("buckets", {}).values())
-                # pending merge-on-read delta versions are live data
-                referenced.update(
-                    int(x)
-                    for vs in (c.get("deltas") or {}).values()
-                    for x in vs
-                )
+            kept += 1
+            referenced.update(int(x) for x in c.get("buckets", {}).values())
+            # pending merge-on-read delta versions are live data
+            referenced.update(
+                int(x) for vs in (c.get("deltas") or {}).values() for x in vs
+            )
         removed_versions = 0
         data_root = f"{self.path}/data"
         if os.path.isdir(data_root):
@@ -688,7 +665,9 @@ class KeyBucketedTarget:
     def init_snapshot(self, snapshot: DataFrame, watermark: tuple[int, int]) -> None:
         """T10: initial load; the journal watermark is recorded BEFORE
         the snapshot read by the caller, so streaming overlap replays
-        idempotently (As400SnapshotChangeEventSource.java:125-137)."""
+        idempotently (As400SnapshotChangeEventSource.java:125-137).
+        A re-snapshot keeps the writer fences and applied lineage."""
+        last = self.last_commit() or {}
         version = self._latest_version() + 1
         buckets = self._write_buckets(snapshot, version)
         self._write_commit(
@@ -698,6 +677,8 @@ class KeyBucketedTarget:
                 "buckets": {str(b): version for b in buckets},
                 "deltas": {},  # full replace supersedes pending deltas
                 "watermark": list(watermark),
+                "writer_batch_ids": last.get("writer_batch_ids") or {},
+                "applied": last.get("applied") or {},
                 "partitions": [],
                 "ts": time.time(),
                 "kind": "snapshot",
@@ -964,31 +945,41 @@ class KeyBucketedTarget:
                     )
                 else:
                     writer_wms[writer_id] = list(watermark)
-        commit = {
-            "version": version,
-            "batch_id": effective_id,
-            "buckets": bucket_map,
-            "deltas": deltas_map,
-            "watermark": new_wm,
-            "writer_watermarks": writer_wms,
-            # a callable defers lineage computation until after the
-            # write actions ran — the tailer passes an Observation-
-            # backed provider so per-receiver stats ride the merge's
-            # own jobs instead of a separate aggregation job
-            "partitions": (
-                partitions() if callable(partitions) else partitions
-            )
-            or [],
-            "ts": time.time(),
-            "kind": "merge",
-            "schema_version": (last or {}).get("schema_version", -1),
-            "schema": decl,
-            "num_buckets": self.num_buckets,
-        }
+        writer_fences = dict((last or {}).get("writer_batch_ids") or {})
         if writer_id is not None:
-            commit["writer_id"] = writer_id
-            commit["writer_batch_id"] = batch_id
-        self._write_commit(commit)
+            writer_fences[writer_id] = batch_id
+        # a callable defers lineage computation until after the write
+        # actions ran — the tailer passes an Observation-backed
+        # provider so per-receiver stats ride the merge's own jobs
+        # instead of a separate aggregation job
+        if callable(partitions):
+            partitions = partitions()
+        partitions = partitions or []
+        # roll this batch's rows into the per-receiver applied lineage
+        applied = dict((last or {}).get("applied") or {})
+        for p in partitions:
+            r = str(int(p["receiver_idx"]))
+            seq, n = int(p["seq"]), int(p["events_applied"])
+            prev = applied.get(r)
+            applied[r] = [seq, n] if prev is None else [max(prev[0], seq), prev[1] + n]
+        self._write_commit(
+            {
+                "version": version,
+                "batch_id": effective_id,
+                "buckets": bucket_map,
+                "deltas": deltas_map,
+                "watermark": new_wm,
+                "writer_watermarks": writer_wms,
+                "writer_batch_ids": writer_fences,
+                "applied": applied,
+                "partitions": partitions,
+                "ts": time.time(),
+                "kind": "merge",
+                "schema_version": (last or {}).get("schema_version", -1),
+                "schema": decl,
+                "num_buckets": self.num_buckets,
+            }
+        )
         return {
             "skipped": False,
             "batch_id": effective_id,

@@ -84,14 +84,7 @@ class IncrementalSnapshotter:
         # other column than what the sink merges on would chunk wrong
         self.key_col = key_col or cfg.key_column
         self.writer_id = writer_id
-        self.target = target or KeyBucketedTarget(
-            spark,
-            cfg.target_path,
-            key=cfg.key_column,
-            num_buckets=cfg.num_buckets,
-            delete_mode=cfg.delete_mode,
-            write_mode=cfg.merge_write_mode,
-        )
+        self.target = target or KeyBucketedTarget.for_config(spark, cfg)
 
     def completed_chunks(self) -> int:
         """Chunks already committed under the incremental-snapshot

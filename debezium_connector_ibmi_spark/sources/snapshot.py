@@ -64,13 +64,7 @@ def initial_snapshot(
     ``determineSnapshotOffset`` marking the position processed).
     """
     head = journal_head(spark, cfg.journal_path)
-    target = KeyBucketedTarget(
-        spark,
-        cfg.target_path,
-        key=cfg.key_column,
-        num_buckets=cfg.num_buckets,
-        delete_mode=cfg.delete_mode,
-    )
+    target = KeyBucketedTarget.for_config(spark, cfg)
     target.init_snapshot(snapshot_state(pages), watermark=head)
     return head
 
@@ -96,13 +90,7 @@ def schema_only_snapshot(
     commit first, then ``declare_schema`` (which folds the schema into
     the latest commit, preserving the watermark)."""
     head = journal_head(spark, cfg.journal_path)
-    target = KeyBucketedTarget(
-        spark,
-        cfg.target_path,
-        key=cfg.key_column,
-        num_buckets=cfg.num_buckets,
-        delete_mode=cfg.delete_mode,
-    )
+    target = KeyBucketedTarget.for_config(spark, cfg)
     state = snapshot_state(pages)
     # head watermark recorded with ZERO data rows (empty bucket map)
     target.init_snapshot(state.limit(0), watermark=head)
@@ -132,13 +120,7 @@ def backfill_new_tables(
     """Targeted snapshot of newly included tables merged into the
     existing target (incremental snapshot). Rows enter at snapshot
     position; the ongoing stream keeps winning on position."""
-    target = KeyBucketedTarget(
-        spark,
-        cfg.target_path,
-        key=cfg.key_column,
-        num_buckets=cfg.num_buckets,
-        delete_mode=cfg.delete_mode,
-    )
+    target = KeyBucketedTarget.for_config(spark, cfg)
     merged = 0
     for _table, pages in sorted(new_tables_pages.items()):
         batch = snapshot_state(pages).withColumn("op", F.lit("c"))

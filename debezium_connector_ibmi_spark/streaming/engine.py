@@ -24,6 +24,7 @@ Per-batch throughput/lag metrics are recorded in the commit's
 from __future__ import annotations
 
 import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -218,6 +219,55 @@ def apply_schema_changes_for_slice(
     return apply_schema_events(target, evolution, versions)
 
 
+def discover_chain(
+    journal_path: str, read_journal: Callable[[], DataFrame]
+) -> list[dict]:
+    """The usable receiver chain: parquet footers (metadata-only,
+    Iceberg-manifest analogue) when the layout allows, else the
+    2-column scan of ``read_journal()``, which is called only then —
+    the fixed per-run cost the footers remove is what dilutes
+    wall-clock scaling at small core counts."""
+    return usable_chain(
+        receiver_lineage_from_footers(journal_path)
+        or receiver_lineage(read_journal())
+    )
+
+
+def triage_position(
+    chain: list[dict], wm: tuple[int, int], policy: str, who: str = ""
+) -> dict | None:
+    """T6 invalid-position triage (the reference's CPF7053 handling):
+    None when the committed watermark ``wm`` is a valid resume point.
+    Otherwise the journal was truncated past it: raise under policy
+    ``fail``, else return the logged data-loss marker
+    (``reset_earliest``; ``resume_start`` then plans from the chain
+    head)."""
+    if validate_position(chain, Position(wm[0], wm[1], processed=True)):
+        return None
+    head = (chain[0]["receiver_idx"], chain[0]["min_seq"])
+    if policy == "fail":
+        raise InvalidPositionError(
+            f"{who}resume position {wm} precedes earliest "
+            f"available entry {head} — journal truncated"
+        )
+    return {
+        "skipped": False,
+        "data_loss_reset": True,
+        "from": wm,
+        "to_earliest": head,
+    }
+
+
+def resume_start(chain: list[dict], wm: tuple[int, int]) -> Position:
+    """Where planning resumes: just past the committed watermark, or
+    (reset_earliest) the chain head, inclusive, when the chain no
+    longer reaches the watermark."""
+    start = Position(wm[0], wm[1], processed=True)
+    if validate_position(chain, start):
+        return start
+    return Position(chain[0]["receiver_idx"], chain[0]["min_seq"], processed=False)
+
+
 def _require_single_table(cfg: EngineConfig) -> None:
     """The sink's state is keyed by ``cfg.key_column`` alone (the
     reference keeps one topic/table per source table); two tables
@@ -246,14 +296,7 @@ class JournalTailer:
         self.spark = spark
         self.cfg = cfg
         self.evolution = evolution  # EvolutionSpec or None
-        self.target = target or KeyBucketedTarget(
-            spark,
-            cfg.target_path,
-            key=cfg.key_column,
-            num_buckets=cfg.num_buckets,
-            delete_mode=cfg.delete_mode,
-            write_mode=cfg.merge_write_mode,
-        )
+        self.target = target or KeyBucketedTarget.for_config(spark, cfg)
 
     def _read_journal(self) -> DataFrame:
         """Journal scan in the configured layout. Binary = packed
@@ -489,50 +532,17 @@ class JournalTailer:
         watermark, so killing the process anywhere and rerunning
         resumes correctly."""
         journal = self._read_journal()
-        # chain discovery: parquet footers (metadata-only, Iceberg-
-        # manifest analogue) when the layout allows, else the 2-column
-        # scan — the fixed per-run cost this removes is what dilutes
-        # wall-clock scaling efficiency at small core counts
-        chain = usable_chain(
-            receiver_lineage_from_footers(self.cfg.journal_path)
-            or receiver_lineage(journal)
+        chain = discover_chain(self.cfg.journal_path, lambda: journal)
+        marker = triage_position(
+            chain, self.target.watermark(), self.cfg.invalid_position_policy
         )
-        out = []
-        # T6: invalid-position triage before the loop (the reference's
-        # CPF7053 handling: fail, or reset-to-earliest with a logged
-        # data-loss marker)
-        ridx, seq = self.target.watermark()
-        start = Position(ridx, seq, processed=True)
-        if not validate_position(chain, start):
-            if self.cfg.invalid_position_policy == "fail":
-                raise InvalidPositionError(
-                    f"resume position ({ridx},{seq}) precedes earliest "
-                    f"available entry ({chain[0]['receiver_idx']},"
-                    f"{chain[0]['min_seq']}) — journal truncated"
-                )
-            out.append(
-                {
-                    "skipped": False,
-                    "data_loss_reset": True,
-                    "from": (ridx, seq),
-                    "to_earliest": (
-                        chain[0]["receiver_idx"],
-                        chain[0]["min_seq"],
-                    ),
-                }
-            )
+        out = [marker] if marker else []
         # the data-loss marker above is a diagnostic, not a processed
         # range — count only range iterations against max_batches
         # (same fix as MultiTableTailer.run_to_head, round-5 ADVICE)
         n_ranges = 0
         while max_batches is None or n_ranges < max_batches:
-            ridx, seq = self.target.watermark()
-            start = Position(ridx, seq, processed=True)
-            if not validate_position(chain, start):
-                # reset_earliest: start just before the chain head
-                start = Position(
-                    chain[0]["receiver_idx"], chain[0]["min_seq"], processed=False
-                )
+            start = resume_start(chain, self.target.watermark())
             rng = plan_next_range(chain, start, self.cfg.max_entries_per_batch)
             if rng is None:
                 break
@@ -637,10 +647,7 @@ class JournalTailer:
             out["state"] = "empty"
             return out
         try:
-            chain = usable_chain(
-                receiver_lineage_from_footers(self.cfg.journal_path)
-                or receiver_lineage(self._read_journal())
-            )
+            chain = discover_chain(self.cfg.journal_path, self._read_journal)
             if not validate_position(
                 chain, Position(wm[0], wm[1], processed=True)
             ):
@@ -699,14 +706,7 @@ def run_structured_stream(
     )
 
     _require_single_table(cfg)
-    target = target or KeyBucketedTarget(
-        spark,
-        cfg.target_path,
-        key=cfg.key_column,
-        num_buckets=cfg.num_buckets,
-        delete_mode=cfg.delete_mode,
-        write_mode=cfg.merge_write_mode,
-    )
+    target = target or KeyBucketedTarget.for_config(spark, cfg)
 
     def _stream_writer_id() -> str:
         """Identity of this stream's epoch-id domain: the streaming

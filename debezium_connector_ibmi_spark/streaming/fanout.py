@@ -34,18 +34,16 @@ from pyspark.sql import SparkSession
 
 from debezium_connector_ibmi_spark.config import EngineConfig
 from debezium_connector_ibmi_spark.plans.range_planner import (
-    InvalidPositionError,
     Position,
     PositionRange,
     plan_next_range,
-    receiver_lineage,
-    receiver_lineage_from_footers,
-    usable_chain,
-    validate_position,
 )
 from debezium_connector_ibmi_spark.streaming.engine import (
     JournalTailer,
     _mor_compact_due,
+    discover_chain,
+    resume_start,
+    triage_position,
 )
 
 
@@ -105,56 +103,30 @@ class MultiTableTailer:
         and persists it once, and fans the slice out to each table's
         own fenced merge (tables already past the range skip)."""
         journal = next(iter(self.tailers.values()))._read_journal()
-        chain = usable_chain(
-            receiver_lineage_from_footers(self.cfg.journal_path)
-            or receiver_lineage(journal)
-        )
+        chain = discover_chain(self.cfg.journal_path, lambda: journal)
         out: list[dict] = []
-        # T6 triage per table (mirrors JournalTailer.run_to_head): a
-        # table whose committed watermark precedes the usable chain was
+        # T6 triage per table (as JournalTailer.run_to_head): a table
+        # whose committed watermark precedes the usable chain was
         # truncated past its checkpoint — honor the policy instead of
         # silently replaying from earliest.
         for table, tl in self.tailers.items():
-            wm = tl.target.watermark()
-            if not validate_position(chain, Position(wm[0], wm[1], processed=True)):
-                if self.cfg.invalid_position_policy == "fail":
-                    raise InvalidPositionError(
-                        f"table {table}: resume position {wm} precedes "
-                        f"earliest available entry "
-                        f"({chain[0]['receiver_idx']},{chain[0]['min_seq']})"
-                        " — journal truncated"
-                    )
-                out.append(
-                    {
-                        "table": table,
-                        "skipped": False,
-                        "data_loss_reset": True,
-                        "from": wm,
-                        "to_earliest": (
-                            chain[0]["receiver_idx"],
-                            chain[0]["min_seq"],
-                        ),
-                    }
-                )
+            marker = triage_position(
+                chain,
+                tl.target.watermark(),
+                self.cfg.invalid_position_policy,
+                who=f"table {table}: ",
+            )
+            if marker:
+                out.append({"table": table, **marker})
         # data_loss_reset markers above are diagnostics, not processed
         # ranges — count only range iterations against max_batches
         n_ranges = 0
         while max_batches is None or n_ranges < max_batches:
             wms = self.watermarks()
-            # reset_earliest: an invalid watermark plans from the chain
-            # head (processed=False = inclusive) instead of its stale
-            # pre-truncation position
-            starts = []
-            for wm in wms.values():
-                p = Position(wm[0], wm[1], processed=True)
-                if not validate_position(chain, p):
-                    p = Position(
-                        chain[0]["receiver_idx"],
-                        chain[0]["min_seq"],
-                        processed=False,
-                    )
-                starts.append(p)
-            start = min(starts, key=lambda p: (p.receiver_idx, p.seq, p.processed))
+            start = min(
+                (resume_start(chain, wm) for wm in wms.values()),
+                key=lambda p: (p.receiver_idx, p.seq, p.processed),
+            )
             rng = plan_next_range(
                 chain,
                 start,

@@ -43,16 +43,16 @@ from pyspark.sql import DataFrame, SparkSession
 from debezium_connector_ibmi_spark.config import EngineConfig
 from debezium_connector_ibmi_spark.plans.range_planner import (
     Position,
-    receiver_lineage,
-    receiver_lineage_from_footers,
-    usable_chain,
     validate_position,
 )
 from debezium_connector_ibmi_spark.sources.snapshot import (
     initial_snapshot,
     schema_only_snapshot,
 )
-from debezium_connector_ibmi_spark.streaming.engine import JournalTailer
+from debezium_connector_ibmi_spark.streaming.engine import (
+    JournalTailer,
+    discover_chain,
+)
 
 SNAPSHOT_MODES = (
     "initial",
@@ -70,10 +70,7 @@ def _position_usable(tailer: JournalTailer) -> bool:
         journal = tailer._read_journal()
     except Exception:
         return True  # no journal yet: nothing to be behind of
-    chain = usable_chain(
-        receiver_lineage_from_footers(tailer.cfg.journal_path)
-        or receiver_lineage(journal)
-    )
+    chain = discover_chain(tailer.cfg.journal_path, lambda: journal)
     r, s = tailer.target.watermark()
     return validate_position(chain, Position(r, s, processed=True))
 

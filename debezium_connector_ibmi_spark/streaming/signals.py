@@ -74,14 +74,7 @@ class SignalProcessor:
         self.signal_path = cfg.extra.get(
             "signal_path", f"{cfg.target_path.rstrip('/')}/_signals"
         )
-        self.target = KeyBucketedTarget(
-            spark,
-            cfg.target_path,
-            key=cfg.key_column,
-            num_buckets=cfg.num_buckets,
-            delete_mode=cfg.delete_mode,
-            write_mode=cfg.merge_write_mode,
-        )
+        self.target = KeyBucketedTarget.for_config(spark, cfg)
 
     def pending(self) -> list[dict]:
         """Unprocessed signals, oldest first (fence-filtered).

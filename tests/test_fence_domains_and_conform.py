@@ -91,6 +91,39 @@ def test_new_checkpoint_writer_rebases_not_skips(spark, tmpdir_path):
     assert {x["url"] for x in t.read().collect()} >= {"u0", "u1", "u2", "fresh"}
 
 
+def test_writer_fences_survive_expire_versions(spark, tmpdir_path):
+    """Writer fences older than the retention window must survive a
+    vacuum: otherwise already-processed signals turn pending again, a
+    replayed stream epoch re-applies and an incremental snapshot
+    restarts from chunk 0."""
+    from debezium_connector_ibmi_spark.sources.incremental import (
+        INCREMENTAL_WRITER_ID,
+        IncrementalSnapshotter,
+    )
+
+    cfg = EngineConfig(
+        journal_path=f"{tmpdir_path}/j", target_path=f"{tmpdir_path}/t", num_buckets=4
+    )
+    t = KeyBucketedTarget(spark, cfg.target_path, num_buckets=4)
+    snap = IncrementalSnapshotter(spark, cfg, _batch(spark, []), n_chunks=4, target=t)
+    t.record_writer_progress("signals", 5)
+    t.record_writer_progress(INCREMENTAL_WRITER_ID, 1)
+    epoch0 = _batch(spark, [("s0", 1, 0, "c", "streamed")])
+    assert t.merge(epoch0, batch_id=0, writer_id="stream-q")["skipped"] is False
+    for i in range(3):
+        t.merge(
+            _batch(spark, [(f"u{i}", 0, i, "c", f"v{i}")]),
+            batch_id=t.last_batch_id() + 1,
+            watermark=(0, i),
+        )
+    assert snap.completed_chunks() == 2
+
+    t.expire_versions(keep_last=2)
+    assert t.last_writer_batch_id("signals") == 5
+    assert t.merge(epoch0, batch_id=0, writer_id="stream-q")["skipped"] is True
+    assert snap.completed_chunks() == 2
+
+
 def test_conform_casts_present_columns_after_widen(spark, tmpdir_path):
     """Widen a column the SOURCE keeps providing at the old narrow
     type: later merges must write the widened type so mixed-version

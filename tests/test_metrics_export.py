@@ -77,6 +77,39 @@ def test_prometheus_export(spark, tmpdir_path):
     assert any(ln.startswith("cdc_events_seen_total") for ln in light)
 
 
+def test_prometheus_one_series_per_receiver(spark, tmpdir_path):
+    """A receiver applied over several batches is still ONE series per
+    metric: the textfile collector rejects duplicate label sets."""
+    import json
+
+    cfg = EngineConfig(
+        journal_path=f"{tmpdir_path}/j",
+        target_path=f"{tmpdir_path}/t",
+        num_buckets=4,
+        max_entries_per_batch=150,
+    )
+    write_journal(spark, GEN, cfg.journal_path, num_files=2)
+    tailer = JournalTailer(spark, cfg)
+    tailer.run_to_head()
+    with open(f"{cfg.target_path}/_metrics/batches.jsonl") as fh:
+        spans = [
+            {p["receiver_idx"] for p in json.loads(line)["partitions"]}
+            for line in fh
+        ]
+    assert any(
+        len([s for s in spans if r in s]) > 1 for r in set().union(*spans)
+    ), "precondition: some receiver spans more than one batch"
+
+    series = [
+        ln.rsplit(" ", 1)[0]
+        for ln in prometheus_lines(tailer, include_lag=False)
+        if not ln.startswith("#")
+    ]
+    assert len(series) == len(set(series)), series
+    applied = [s for s in series if s.startswith("cdc_applied_seq")]
+    assert len(applied) == len(tailer.target.lineage()) > 1
+
+
 # -- round-5: structured health bean (VERDICT r4 #6) -------------------
 
 
