@@ -25,6 +25,18 @@ def get_spark(
     pandas UDF transfer), UTC session TZ (oracle comparability),
     shuffle partitions sized to cores in local mode instead of the
     200 default.
+
+    DataFrame debugging is off
+    (``spark.python.sql.dataFrameDebugging.enabled=false``). When on,
+    PySpark wraps every Column function to record its Python call
+    site: an active-session lookup, a conf read over py4j, a stack
+    walk and two JVM calls per call, which more than doubled the
+    py4j round trips of a catchup drain. What it drops is the Python
+    file:line query context of an analysis error; the JVM error text
+    is unchanged. Re-enable it for debugging with
+    ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+    "true"}`` on the process's first session (PySpark reads the flag
+    once per process, at the first Column call).
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -66,6 +78,8 @@ def get_spark(
         # key-buckets a batch touches (partition-pruned copy-on-write)
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.ui.enabled", "false")
+        # no per-Column-call Python stack capture (see docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # deliberately modest heap: oversized local-mode heaps (48g+)
         # measured 5-20s GC stalls with binary-heavy rows; 16g is
         # fast and stable at 32 threads (override via env if needed)

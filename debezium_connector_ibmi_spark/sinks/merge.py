@@ -40,6 +40,14 @@ full table state forward, so each lookup reads one file and
                               rolled up over every merge so far
     partitions                this merge's own lineage rows (FIXTURES §3)
 
+Reads are schema-given: every merge, schema change and rewrite
+commit declares its table schema, so ``read()`` hands it to the
+parquet scan (mor delta files add the ``__deleted`` marker) and builds
+its DataFrame without a schema-inference job. An ``init_snapshot``
+commit declares none (the snapshot frame's columns would conform
+``__deleted`` away at the first rewrite-mode merge), so until the
+first merge declares one, a read infers as before.
+
 On a real cluster the identical interface binds to Iceberg
 (``merge`` -> SQL MERGE INTO + snapshot-property fence); the manifest
 code below is the local stand-in, not the design.
@@ -58,6 +66,22 @@ from pyspark.sql import functions as F
 from debezium_connector_ibmi_spark.operators.compaction import (
     last_event_per_key_agg,
 )
+
+
+def _ddl(decl: list[list[str]]) -> str:
+    """A declared commit schema ([[name, sparkTypeString], ...]) as a
+    DDL string (parsed JVM-side in one call)."""
+    return ", ".join(f"`{n}` {t}" for n, t in decl)
+
+
+def _delta_schema(decl: list[list[str]]) -> list[list[str]]:
+    """Columns of a merge-on-read delta file: the declared schema plus
+    the ``__deleted`` tombstone marker (already declared in
+    ``delete_mode="rewrite"``)."""
+    dd = [list(x) for x in decl]
+    if not any(n == "__deleted" for n, _ in dd):
+        dd.append(["__deleted", "boolean"])
+    return dd
 
 
 class KeyBucketedTarget:
@@ -206,9 +230,7 @@ class KeyBucketedTarget:
     def _schema_df(self):
         """Empty DataFrame with the declared schema (for applying
         schema transforms when the table has no data)."""
-        decl = self.declared_schema()
-        ddl = ", ".join(f"{n} {t}" for n, t in decl)
-        return self.spark.createDataFrame([], ddl)
+        return self.spark.createDataFrame([], _ddl(self.declared_schema()))
 
     def _conform(self, df: DataFrame, decl: list[list[str]]) -> DataFrame:
         """Make ``df`` match the declared schema: add missing declared
@@ -359,8 +381,15 @@ class KeyBucketedTarget:
         path applies at write time (the version tie-break encodes
         "batch beats state on replayed positions": within a bucket the
         base version always precedes its delta versions). Buckets with
-        no deltas keep the old single-scan fast path and byte-
-        identical plans."""
+        no deltas keep the old single-scan fast path.
+
+        The scans are schema-given (the commit's declared ``schema``;
+        delta versions add ``__deleted``), so building the DataFrame
+        runs no Spark job. A commit without a declared schema (an
+        ``init_snapshot`` not yet followed by a merge) infers it from
+        a file footer: one job per scan. Where the schema declares
+        ``__deleted``, base files written without it (a snapshot's)
+        read it as false."""
         c = self.commit_at(version) if version is not None else self.last_commit()
         if c is None:
             raise FileNotFoundError(f"target {self.path} has no commits")
@@ -387,17 +416,23 @@ class KeyBucketedTarget:
                     )
         if not paths and not dpaths:
             return None
-        base = self.spark.read.parquet(*paths) if paths else None
+        decl = c.get("schema")
+        base = self._scan(paths, decl) if paths else None
+        if base is not None and any(n == "__deleted" for n, _ in decl or []):
+            # files written before the marker was declared (an
+            # init_snapshot's) read it null: no tombstone, a live row
+            base = base.withColumn(
+                "__deleted", F.coalesce(F.col("__deleted"), F.lit(False))
+            )
         if not dpaths:
             return base
         parts = []
         if base is not None:
             parts.append(base.withColumn("__dv", F.lit(-1)))
+        ddecl = None if decl is None else _delta_schema(decl)
         for ver in sorted(dpaths):
             parts.append(
-                self.spark.read.parquet(*dpaths[ver]).withColumn(
-                    "__dv", F.lit(ver)
-                )
+                self._scan(dpaths[ver], ddecl).withColumn("__dv", F.lit(ver))
             )
         allrows = parts[0]
         for p in parts[1:]:
@@ -420,6 +455,14 @@ class KeyBucketedTarget:
                 "__deleted", F.coalesce(F.col("__deleted"), F.lit(False))
             )
         return resolved.drop("__dv")
+
+    def _scan(self, paths: list[str], decl: list[list[str]] | None) -> DataFrame:
+        """Parquet scan of data files this sink wrote: with their
+        declared schema when known, else footer inference (one job)."""
+        reader = self.spark.read
+        if decl is not None:
+            reader = reader.schema(_ddl(decl))
+        return reader.parquet(*paths)
 
     def exists(self) -> bool:
         return self._latest_version() >= 0
@@ -634,8 +677,9 @@ class KeyBucketedTarget:
 
     def _write_buckets(self, df: DataFrame, version: int) -> list[int]:
         """Write df partitioned by key-bucket under a new version dir;
-        returns the bucket ids written. ``bucket`` is kept as a data
-        column too so pruned multi-version reads don't need basePath."""
+        returns the bucket ids written. ``bucket`` lives only in the
+        directory names (``partitionBy``), so the files hold exactly
+        ``df``'s columns: the schema a merge commit declares."""
         out = df.withColumn("bucket", self._bucket_col(F.col(self.key)))
         # repartition by bucket so each bucket is written by exactly
         # one task: file count stays num_buckets regardless of
@@ -865,10 +909,7 @@ class KeyBucketedTarget:
         ).drop("op")
         decl = self.declared_schema()
         if decl is not None:
-            dd = [list(x) for x in decl]
-            if not any(n == "__deleted" for n, _ in dd):
-                dd.append(["__deleted", "boolean"])
-            delta = self._conform(delta, dd)
+            delta = self._conform(delta, _delta_schema(decl))
         else:
             # first-merge declaration parity with cow: drop mode keeps
             # the tombstone marker out of the declared table schema

@@ -49,6 +49,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from debezium_connector_ibmi_spark.config import EngineConfig
 from debezium_connector_ibmi_spark.operators.corpus_ops import hash_bucket
@@ -119,9 +120,14 @@ class IncrementalSnapshotter:
     def _chunk_df(self, idx: int) -> DataFrame:
         prepared = getattr(self, "_prepared_path", None)
         if prepared is not None:
-            # partition-pruned: reads exactly one chunk directory
+            # partition-pruned: reads exactly one chunk directory, with
+            # the source's schema (no inference job)
+            schema = T.StructType(
+                [*self.pages.schema.fields, T.StructField("__chunk", T.LongType())]
+            )
             return (
-                self.spark.read.parquet(prepared)
+                self.spark.read.schema(schema)
+                .parquet(prepared)
                 .filter(F.col("__chunk") == idx)
                 .drop("__chunk")
             )

@@ -127,18 +127,13 @@ def from_binary_journal(binary_journal: DataFrame) -> DataFrame:
     )
 
     d = binary_journal.withColumn("h", decode_header_cols(F.col("header_blob")))
-    # the top-level seq column (when the layout carries it) keeps
-    # planner predicates scan-side; the blob's sequence still decodes
-    # and is asserted equal in tests (C1 round-trip)
-    seq_col = (
-        F.col("seq")
-        if "seq" in binary_journal.columns
-        else F.col("h.sequence").alias("seq")
-    )
+    # the layout's top-level seq column keeps planner predicates
+    # scan-side; the blob's sequence still decodes and is asserted
+    # equal in tests (C1 round-trip)
     return d.select(
         "receiver",
         "receiver_idx",
-        seq_col,
+        "seq",
         (F.col("h.entry_ts_us") / 1_000_000).cast("timestamp").alias("entry_ts"),
         F.col("h.journal_code").alias("journal_code"),
         F.col("h.entry_type").alias("entry_type"),
@@ -167,8 +162,14 @@ def read_binary_journal(spark: SparkSession, path: str) -> DataFrame:
     stays a real partition column (pruning still reaches the scan),
     while ``seq`` predicates apply after the vectorized header decode
     — the reference likewise decodes entry headers to navigate a raw
-    RJNE0200 buffer (RetrieveJournal.java:77-138)."""
-    return from_binary_journal(spark.read.parquet(path))
+    RJNE0200 buffer (RetrieveJournal.java:77-138).
+
+    The scan is schema-given (``BINARY_JOURNAL_SCHEMA``, as the
+    streaming source reads it), so building the DataFrame runs no
+    schema-inference job."""
+    return from_binary_journal(
+        spark.read.schema(BINARY_JOURNAL_SCHEMA).parquet(path)
+    )
 
 
 def write_binary_journal(journal: DataFrame, path: str, num_files: int = 8) -> None:

@@ -27,9 +27,14 @@ SNAPSHOT_POSITION = (-1, -1)
 
 def journal_head(spark: SparkSession, journal_path: str) -> tuple[int, int]:
     """S5: current head position (max (receiver_idx, seq)) — the
-    ``getCurrentPosition`` analogue; columnar scan of 2 columns."""
+    ``getCurrentPosition`` analogue; columnar scan of 2 columns, read
+    with the two columns' types (both journal layouts carry them), so
+    no schema-inference job. ``SNAPSHOT_POSITION`` for a missing path
+    or a journal with no entries."""
     try:
-        j = spark.read.parquet(journal_path)
+        j = spark.read.schema("receiver_idx int, seq bigint").parquet(
+            journal_path
+        )
     except Exception:
         return SNAPSHOT_POSITION
     row = j.agg(

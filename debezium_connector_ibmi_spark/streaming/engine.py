@@ -614,36 +614,48 @@ class JournalTailer:
         - ``healthy``          caught up, or progressing
 
         ``include_lag=False`` skips the one Spark job the lag number
-        needs; the rest is driver-local file/commit state."""
-        c = self.target.last_commit()
+        needs; the rest is driver-local file/commit state.
+
+        Only ``watermark``/``last_batch_id`` are required of the
+        target. One without a commit log (``IcebergTarget``: its fences
+        are table properties) reports ``last_commit_ts`` null, is
+        never ``stalled`` (no commit age), and leaves ``failed`` when
+        its batch fence reaches the failed batch; one without lineage
+        reports ``lag_total`` null."""
+        last_commit = getattr(self.target, "last_commit", None)
+        c = None if last_commit is None else last_commit()
+        commit_ts = None if c is None else c.get("ts")
+        bid = self.target.last_batch_id()
         err = self.last_error()
         wm = self.target.watermark()
         out = {
             "table": (self.cfg.table_include_list or ("",))[0],
             "state": "healthy",
             "watermark": list(wm),
-            "last_commit_ts": None if c is None else c.get("ts"),
-            "last_batch_id": None if c is None else c.get("batch_id"),
+            "last_commit_ts": commit_ts,
+            "last_batch_id": None if c is None and bid < 0 else bid,
             "last_error": None if err is None else err["error"],
             "lag_total": None,
         }
         # journal-behind total (one job); also feeds stall detection
         if include_lag:
             try:
-                out["lag_total"] = sum(
-                    int(r["behind"]) for r in self.lag_metrics().collect()
-                )
+                behind = [r["behind"] for r in self.lag_metrics().collect()]
+                if None not in behind:
+                    out["lag_total"] = sum(behind)
             except Exception:
                 out["lag_total"] = None
         # a failure with no newer successful commit wins — including
         # the failed-before-first-commit case (which is not "empty":
         # the pipeline ran and broke)
         if err is not None and (
-            c is None or c.get("ts") is None or err["ts"] > float(c["ts"])
+            err["ts"] > float(commit_ts)
+            if commit_ts is not None
+            else err["batch_id"] > bid
         ):
             out["state"] = "failed"
             return out
-        if c is None:
+        if c is None and bid < 0 and tuple(wm) == (-1, -1):
             out["state"] = "empty"
             return out
         try:
@@ -656,29 +668,36 @@ class JournalTailer:
         except Exception:
             pass  # no journal yet: nothing to be behind of
         behind = out["lag_total"]
-        age = time.time() - float(c.get("ts") or 0)
-        if behind is not None and behind > 0 and age > stall_after_s:
+        if (
+            commit_ts is not None
+            and behind is not None
+            and behind > 0
+            and time.time() - float(commit_ts) > stall_after_s
+        ):
             out["state"] = "stalled"
         return out
 
     def lag_metrics(self) -> DataFrame:
         """A1: per-receiver JournalBehind/JournalOffset metric table —
-        journal head vs the sink's applied per-partition watermarks."""
+        journal head vs the sink's applied per-partition watermarks.
+        A target without applied lineage (``IcebergTarget``) reports
+        ``applied_seq`` and ``behind`` null: its lag is unknown."""
         from debezium_connector_ibmi_spark.operators.transactions import journal_lag
 
         journal = self._read_journal()
-        lineage_rows = self.target.lineage()
-        if lineage_rows:
-            applied = self.spark.createDataFrame(
-                [
-                    (int(p["receiver_idx"]), int(p["seq"]))
-                    for p in lineage_rows
-                ],
-                "receiver_idx int, seq long",
-            )
-        else:
-            applied = self.spark.createDataFrame([], "receiver_idx int, seq long")
-        return journal_lag(journal, applied)
+        lineage = getattr(self.target, "lineage", None)
+        applied = self.spark.createDataFrame(
+            [
+                (int(p["receiver_idx"]), int(p["seq"]))
+                for p in (lineage() if lineage is not None else [])
+            ],
+            "receiver_idx int, seq long",
+        )
+        lag = journal_lag(journal, applied)
+        if lineage is None:
+            unknown = F.lit(None).cast("long")
+            lag = lag.withColumns({"applied_seq": unknown, "behind": unknown})
+        return lag
 
 
 def run_structured_stream(

@@ -107,7 +107,10 @@ def prometheus_lines(tailer, include_lag: bool = True) -> list[str]:
     r, s = tailer.target.watermark()
     out.append(_fmt("cdc_watermark_receiver_idx", r))
     out.append(_fmt("cdc_watermark_seq", s))
-    for p in tailer.target.lineage():
+    # a target without lineage (IcebergTarget) exports no per-receiver
+    # applied or behind series: they are unknown, not zero
+    lineage = getattr(tailer.target, "lineage", None)
+    for p in lineage() if lineage is not None else []:
         out.append(
             _fmt(
                 "cdc_applied_seq",
@@ -117,6 +120,8 @@ def prometheus_lines(tailer, include_lag: bool = True) -> list[str]:
         )
     if include_lag:
         for row in tailer.lag_metrics().collect():
+            if row["behind"] is None:
+                continue
             out.append(
                 _fmt(
                     "cdc_journal_behind",

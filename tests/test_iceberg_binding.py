@@ -263,3 +263,57 @@ def test_merge_sql_actually_executes_on_parquet_tables(spark, tmpdir_path):
         f"WHERE {guard}"
     ).collect()
     assert {r["url"] for r in rows} == {"u1", "u2"}  # s.seq >= t.seq self-join
+
+
+def test_health_and_metrics_over_iceberg_target(spark, tmpdir_path):
+    """A tailer over the production binding: ``health()``,
+    ``lag_metrics()`` and the Prometheus export use only the
+    merge-target interface, and report null what needs a commit log
+    or applied lineage the binding does not keep."""
+    from debezium_connector_ibmi_spark.config import EngineConfig
+    from debezium_connector_ibmi_spark.datagen.journal import (
+        JournalGenConfig,
+        write_journal,
+    )
+    from debezium_connector_ibmi_spark.sources.snapshot import journal_head
+    from debezium_connector_ibmi_spark.streaming.engine import JournalTailer
+    from debezium_connector_ibmi_spark.streaming.metrics_export import (
+        prometheus_lines,
+    )
+
+    cfg = EngineConfig(
+        journal_path=f"{tmpdir_path}/j",
+        target_path=f"{tmpdir_path}/t",
+        max_entries_per_batch=150,
+    )
+    write_journal(
+        spark, JournalGenConfig(n_urls=20, n_ops=200), cfg.journal_path, num_files=1
+    )
+    target = IcebergTarget(FakeIcebergSession(), "lake.db.pages")
+    tailer = JournalTailer(spark, cfg, target=target)
+    h = tailer.health(include_lag=False)
+    assert h["state"] == "empty" and h["last_batch_id"] is None
+
+    # a failed first batch, then a run that commits past it
+    merge = target.merge
+    target.merge = lambda *a, **k: (_ for _ in ()).throw(RuntimeError("boom"))
+    with pytest.raises(RuntimeError, match="boom"):
+        tailer.run_to_head()
+    h = tailer.health(include_lag=False)
+    assert h["state"] == "failed" and "boom" in h["last_error"]
+    target.merge = merge
+    assert tailer.run_to_head()
+    head = journal_head(spark, cfg.journal_path)
+    assert target.watermark() == head
+
+    h = tailer.health(stall_after_s=0.0)
+    assert h["state"] == "healthy"
+    assert h["watermark"] == list(head) and h["last_batch_id"] >= 0
+    assert h["last_commit_ts"] is None and h["lag_total"] is None
+    lag = tailer.lag_metrics().collect()
+    assert lag and all(r["behind"] is None for r in lag)
+    lines = prometheus_lines(tailer)
+    assert f"cdc_watermark_seq {head[1]}" in lines
+    assert not any(
+        ln.startswith(("cdc_applied_seq", "cdc_journal_behind")) for ln in lines
+    )

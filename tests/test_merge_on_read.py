@@ -236,15 +236,18 @@ def test_mor_expire_keeps_live_delta_versions(
 
 def test_mor_single_job_per_batch(tailed_150):
     """The motivation: a mor tailer batch runs FEWER Spark jobs than a
-    cow batch — the bucket-discovery aggregation (2 jobs under AQE) is
-    gone; only the delta write remains (mirror of the round-4 lineage
-    jobs test)."""
+    cow batch. A cow batch fills the persisted batch first (the
+    compaction's shuffle stage and a result stage under AQE, which
+    also carry the touched-bucket Observation), then merges it with
+    the current state of the touched buckets (the winner aggregation
+    adds a shuffle stage); a mor batch is one delta write with no
+    cache fill and no state read."""
     _, out_mor, jobs_mor = tailed_150["mor"]
     _, _, jobs_cow = tailed_150["cow"]
     n_batches = sum(1 for s in out_mor if "events" in s)
     assert n_batches >= 4
     # cow pays >= 2 extra jobs per batch (AQE shuffle + result stage
-    # of the bucket-discovery distinct)
+    # of the cache fill)
     assert jobs_cow - jobs_mor >= 2 * n_batches, (
         f"mor={jobs_mor} cow={jobs_cow} batches={n_batches}"
     )
