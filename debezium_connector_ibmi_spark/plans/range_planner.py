@@ -39,13 +39,6 @@ class PositionRange:
 
     start: Position
     end: Position
-    # planner's upper bound on entries in the range (seq-span budget
-    # consumed); None when the range was built without a plan. Free
-    # planner metadata for per-batch strategy picks without an action
-    # (currently informational: the round-5 fold gate that read it was
-    # removed in round 6 after re-measurement — see engine.py's
-    # TOUCHED_BUCKETS_VIA_OBSERVE note).
-    est_entries: int | None = None
 
     def predicate(self) -> Column:
         r, s = F.col("receiver_idx"), F.col("seq")
@@ -229,6 +222,4 @@ def plan_next_range(
         end = Position(ridx, hi)
     if end is None:
         return None
-    return PositionRange(
-        start=start, end=end, est_entries=max_entries - budget
-    )
+    return PositionRange(start=start, end=end)

@@ -1,25 +1,9 @@
 """Registry of driver-contract queries: each entry pairs a PySpark
-DataFrame builder with an equivalent DuckDB/ANSI SQL oracle, run by
-the driver at sf0.01 (see __spark_entry__.py).
-
-Every query realizes a SURVEY.md §2 operator (or a training-pipeline
-op the 100 TB use-case needs) over the driver's testdata tables.
-
-The driver's correctness harness verifies at most 50 queries per
-round in registry-iteration order, so ordering IS the rotation
-policy: an explicit priority list (`_VERIFY_FIRST`, introduced round
-5) whose 50 names are exactly the set that MUST get a fresh driver
-row this round —
-(a) every query new in or changed by this round's code,
-(b) every query whose latest driver-green row is two rounds old
-    (rotated out by the previous round's cap),
-(c) the flagship CDC set (re-verified every round by policy),
-(d) the remainder filled with bench-headline doc/corpus ops.
-Everything after position 50 is code-unchanged and green in the
-PREVIOUS round's file, so nothing is ever verified only by a file
-older than the previous round. `tests/test_round5_advice.py` pins
-the structural invariants (no dupes, nothing unknown, changed/new
-queries inside the cap, previous-round file covers the tail).
+DataFrame builder ``(spark, sf_dir) -> DataFrame`` with an equivalent
+DuckDB/ANSI SQL oracle over the same testdata tables (see
+__spark_entry__.py). Every query realizes a SURVEY.md §2 operator (or
+a training-pipeline op the 100 TB use-case needs). Entries keep module
+order; ``tests/test_entry_contract.py`` checks every oracle.
 """
 
 from __future__ import annotations
@@ -41,113 +25,16 @@ _MODULES = (
     multimodalops, textops, parity_ops,
 )
 
-# the driver verifies the first 50 registry entries each round
-DRIVER_VERIFY_CAP = 50
-
-# names that must land inside the first DRIVER_VERIFY_CAP positions
-# this round, in verification order (see module docstring). Round-7
-# rotation: (a) the 23 queries whose DataFrame builders were rewritten
-# by the round-7 optimizations (results oracle-pinned identical, but
-# each needs a fresh driver row over the NEW plan shape), (b) the 18
-# further queries whose latest green row is r05 (rotated out by the
-# round-6 cap — they MUST refresh this round to keep the "nothing
-# verified by a file older than the previous round" invariant),
-# (c) the 9 remaining slots go to the flagship CDC set — the policy
-# of re-verifying all 15 every round yields 6 slots this round to (a)
-# ∪(b), which exactly fills 41; the 6 CDC queries left outside the
-# cap (cdc_filter_include, cdc_op_type_map, cdc_resume_predicate,
-# cdc_last_per_key, cdc_snapshot_handover, cdc_quarantine_rows) are
-# code-unchanged and r06-green, so the invariant holds for them.
-_VERIFY_FIRST = [
-    # (a) round-7 optimization rewrites: substring-dedup de-skew
-    # (map-side gram stats + broadcast join-back, span-struct removal),
-    "doc_dup_spans",
-    "doc_dup_spans_incremental",
-    "doc_substring_dedup",
-    # (a) minhash/LSH family: candidate localCheckpoint + broadcast
-    # semi-join pruning + single-row-group scan spread,
-    "doc_minhash_signature",
-    "doc_lsh_near_dup_pairs",
-    "doc_simhash",
-    "doc_near_dup_verified",
-    "doc_dup_clusters",
-    "doc_dedup_keep_best",
-    "doc_stream_near_dup_verified",
-    # (a) textops/corpusops: tf-derived document frequency, scan
-    # spread, merged-BPE batch path,
-    "doc_top_terms",
-    "doc_chunk_tokens",
-    "doc_chunk_dedup",
-    "doc_winnow_fingerprints",
-    "doc_token_count_bpe_merged",
-    # (a) embedding/ANN family: hoisted norms, map-only nprobe=1 IVF
-    # assignment, query-side broadcast joins, semantic-dedup
-    # localCheckpoint
-    "emb_knn_brute_force",
-    "emb_ann_lsh_bucket",
-    "emb_cosine_near_dup_pairs",
-    "emb_ivf_topk",
-    "emb_ivf_topk_nprobe2",
-    "emb_ivf_kmeans_recall",
-    "emb_semantic_dedup",
-    "emb_stream_semantic_flags",
-    # (b) last green row is r05, code-unchanged: relational
-    "rel_pricing_summary",
-    "rel_revenue_by_nation",
-    "rel_topk_per_brand",
-    "rel_customers_without_orders",
-    "rel_suppliers_in_asia",
-    "rel_rollup_status",
-    "rel_pivot_returnflag",
-    # (b) last green row is r05: embeddings / corpus / multimodal
-    "emb_scalar_quantize",
-    "doc_decontaminate",
-    "doc_dedup_exact",
-    "mm_image_resize",
-    # (b) last green row is r05: functions + cdc misc
-    "fn_pad_trim",
-    "fn_object_split",
-    "fn_xa_decode",
-    "fn_header_roundtrip",
-    "cdc_null_mask",
-    "cdc_session_count",
-    "cdc_journal_for_table",
-    # (c) flagship CDC set, bench-headline queries first (9 slots)
-    "cdc_changelog_materialize",
-    "cdc_last_per_key_salted",
-    "cdc_envelope_flat",
-    "cdc_txn_group",
-    "cdc_state_dedup",
-    "cdc_state_diff",
-    "cdc_pair_before_after",
-    "cdc_event_counters",
-    "cdc_journal_lag",
-]
-
-
-def _ordered(full: dict) -> dict:
-    out = {}
-    for name in _VERIFY_FIRST:
-        # tolerate names absent from this dict (a query without an
-        # oracle is a weaker rows-only driver check); strictness for
-        # the queries dict is pinned in tests/test_round5_advice.py
-        if name in full:
-            out[name] = full[name]
-    for name, v in full.items():
-        if name not in out:
-            out[name] = v
-    return out
-
 
 def all_queries():
     out = {}
     for mod in _MODULES:
         out.update(mod.QUERIES)
-    return _ordered(out)
+    return out
 
 
 def all_oracles():
     out = {}
     for mod in _MODULES:
         out.update(mod.ORACLES)
-    return _ordered(out)
+    return out

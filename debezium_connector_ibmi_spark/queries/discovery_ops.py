@@ -15,14 +15,13 @@ from debezium_connector_ibmi_spark.functions.typeconv import (
     XA_SRCDTA_LEN,
     decode_xa_transaction,
 )
+from debezium_connector_ibmi_spark.queries.parity_ops import (
+    _EVENT_TYPES,
+    _be_bytes,
+)
 from debezium_connector_ibmi_spark.sources.discovery import (
     decode_fild0100_journal,
 )
-
-
-def _be_bytes(col, nbytes):
-    """Big-endian bytes of a non-negative int, JVM-side."""
-    return F.unhex(F.lpad(F.hex(col), 2 * nbytes, "0"))
 
 
 def _be_bytes_signed32(col):
@@ -32,7 +31,6 @@ def _be_bytes_signed32(col):
 
 
 # --- C14: XA transaction struct decode -----------------------------------
-_EVENT_TYPES = ("signup", "purchase", "click", "view", "error")
 # golden cp037 bytes of each event_type blank-padded to Text(80),
 # computed once at import (same pinned-table pattern as C6's
 # fn_charset_decode golden)

@@ -88,7 +88,7 @@ def fn_charset_decode(spark, sf_dir):
 
 # --- C1/C2: binary header wire-format round-trip --------------------------
 def _be_bytes(col, nbytes):
-    """Big-endian bytes of an int, JVM-side: hex → lpad → unhex."""
+    """Big-endian bytes of a non-negative int, JVM-side: hex → lpad → unhex."""
     return F.unhex(F.lpad(F.hex(col), 2 * nbytes, "0"))
 
 

@@ -54,6 +54,7 @@ from pyspark.sql import types as T
 from debezium_connector_ibmi_spark.config import EngineConfig
 from debezium_connector_ibmi_spark.operators.corpus_ops import hash_bucket
 from debezium_connector_ibmi_spark.sinks.merge import KeyBucketedTarget
+from debezium_connector_ibmi_spark.sources.journal_source import read_journal
 from debezium_connector_ibmi_spark.sources.snapshot import (
     SNAPSHOT_POSITION,
     snapshot_state,
@@ -138,22 +139,6 @@ class IncrementalSnapshotter:
             == idx
         )
 
-    def _read_journal(self) -> DataFrame | None:
-        try:
-            if self.cfg.journal_format == "binary":
-                from debezium_connector_ibmi_spark.sources.journal_source import (
-                    read_binary_journal,
-                )
-
-                return read_binary_journal(self.spark, self.cfg.journal_path)
-            from debezium_connector_ibmi_spark.sources.journal_source import (
-                read_journal,
-            )
-
-            return read_journal(self.spark, self.cfg.journal_path)
-        except Exception:
-            return None  # no journal yet: nothing to anti-join
-
     def _applied_keys(self) -> DataFrame | None:
         """Keys with at least one journal event at a position the
         sink has applied (tailer-domain watermark). 2-column columnar
@@ -162,9 +147,12 @@ class IncrementalSnapshotter:
         wm = self.target.watermark()
         if tuple(wm) <= SNAPSHOT_POSITION:
             return None
-        j = self._read_journal()
-        if j is None:
-            return None
+        try:
+            j = read_journal(
+                self.spark, self.cfg.journal_path, self.cfg.journal_format
+            )
+        except Exception:
+            return None  # no journal yet: nothing to anti-join
         r, s = wm
         # Only ROW events (journal_code R) of THIS pipeline's tables
         # count as "applied": in a shared multi-table journal the

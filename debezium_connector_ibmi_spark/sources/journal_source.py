@@ -36,7 +36,13 @@ JOURNAL_SCHEMA = T.StructType(
 )
 
 
-def read_journal(spark: SparkSession, path: str) -> DataFrame:
+def read_journal(
+    spark: SparkSession, path: str, journal_format: str = "columnar"
+) -> DataFrame:
+    """Batch journal scan in either layout; ``journal_format="binary"``
+    reads packed header blobs and decodes them in-pipeline (C1/C2)."""
+    if journal_format == "binary":
+        return read_binary_journal(spark, path)
     return spark.read.schema(JOURNAL_SCHEMA).parquet(path)
 
 

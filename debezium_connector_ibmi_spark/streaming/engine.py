@@ -298,19 +298,6 @@ class JournalTailer:
         self.evolution = evolution  # EvolutionSpec or None
         self.target = target or KeyBucketedTarget.for_config(spark, cfg)
 
-    def _read_journal(self) -> DataFrame:
-        """Journal scan in the configured layout. Binary = packed
-        header blobs decoded in-pipeline (C1/C2); receiver_idx
-        partition pruning still reaches the scan, seq range predicates
-        apply post-decode."""
-        if self.cfg.journal_format == "binary":
-            from debezium_connector_ibmi_spark.sources.journal_source import (
-                read_binary_journal,
-            )
-
-            return read_binary_journal(self.spark, self.cfg.journal_path)
-        return read_journal(self.spark, self.cfg.journal_path)
-
     def _apply_schema_changes(self, sliced: DataFrame) -> list[int]:
         return apply_schema_changes_for_slice(
             self.target, self.cfg, self.evolution, sliced
@@ -531,7 +518,9 @@ class JournalTailer:
         analogue). Each batch is planned from the sink's committed
         watermark, so killing the process anywhere and rerunning
         resumes correctly."""
-        journal = self._read_journal()
+        journal = read_journal(
+            self.spark, self.cfg.journal_path, self.cfg.journal_format
+        )
         chain = discover_chain(self.cfg.journal_path, lambda: journal)
         marker = triage_position(
             chain, self.target.watermark(), self.cfg.invalid_position_policy
@@ -659,7 +648,12 @@ class JournalTailer:
             out["state"] = "empty"
             return out
         try:
-            chain = discover_chain(self.cfg.journal_path, self._read_journal)
+            chain = discover_chain(
+                self.cfg.journal_path,
+                lambda: read_journal(
+                    self.spark, self.cfg.journal_path, self.cfg.journal_format
+                ),
+            )
             if not validate_position(
                 chain, Position(wm[0], wm[1], processed=True)
             ):
@@ -684,7 +678,9 @@ class JournalTailer:
         ``applied_seq`` and ``behind`` null: its lag is unknown."""
         from debezium_connector_ibmi_spark.operators.transactions import journal_lag
 
-        journal = self._read_journal()
+        journal = read_journal(
+            self.spark, self.cfg.journal_path, self.cfg.journal_format
+        )
         lineage = getattr(self.target, "lineage", None)
         applied = self.spark.createDataFrame(
             [

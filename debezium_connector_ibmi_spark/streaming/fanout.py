@@ -38,6 +38,7 @@ from debezium_connector_ibmi_spark.plans.range_planner import (
     PositionRange,
     plan_next_range,
 )
+from debezium_connector_ibmi_spark.sources.journal_source import read_journal
 from debezium_connector_ibmi_spark.streaming.engine import (
     JournalTailer,
     _mor_compact_due,
@@ -102,7 +103,9 @@ class MultiTableTailer:
         ONE shared range from the minimum per-table watermark, slices
         and persists it once, and fans the slice out to each table's
         own fenced merge (tables already past the range skip)."""
-        journal = next(iter(self.tailers.values()))._read_journal()
+        journal = read_journal(
+            self.spark, self.cfg.journal_path, self.cfg.journal_format
+        )
         chain = discover_chain(self.cfg.journal_path, lambda: journal)
         out: list[dict] = []
         # T6 triage per table (as JournalTailer.run_to_head): a table
@@ -149,9 +152,6 @@ class MultiTableTailer:
                     sub = PositionRange(
                         start=Position(wm[0], wm[1], processed=True),
                         end=rng.end,
-                        # per-table slice of the planned range: the
-                        # plan's span bound still upper-bounds it
-                        est_entries=rng.est_entries,
                     )
                     batch_id = tailer.target.last_batch_id() + 1
                     results[table] = tailer.process_range(sliced, sub, batch_id)

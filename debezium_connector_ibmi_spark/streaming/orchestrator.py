@@ -45,6 +45,7 @@ from debezium_connector_ibmi_spark.plans.range_planner import (
     Position,
     validate_position,
 )
+from debezium_connector_ibmi_spark.sources.journal_source import read_journal
 from debezium_connector_ibmi_spark.sources.snapshot import (
     initial_snapshot,
     schema_only_snapshot,
@@ -67,7 +68,9 @@ def _position_usable(tailer: JournalTailer) -> bool:
     """T6 probe: is the committed watermark a valid resume point
     against the usable receiver chain?"""
     try:
-        journal = tailer._read_journal()
+        journal = read_journal(
+            tailer.spark, tailer.cfg.journal_path, tailer.cfg.journal_format
+        )
     except Exception:
         return True  # no journal yet: nothing to be behind of
     chain = discover_chain(tailer.cfg.journal_path, lambda: journal)

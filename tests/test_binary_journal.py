@@ -15,6 +15,7 @@ from debezium_connector_ibmi_spark.sources.journal_source import (
     from_binary_journal,
     to_binary_journal,
 )
+from debezium_connector_ibmi_spark.streaming.dedup_stream import await_available_now
 from debezium_connector_ibmi_spark.testing import state_df_to_dict
 
 GEN = JournalGenConfig(n_urls=30, n_ops=300, txn_size=20, receiver_rotation=60)
@@ -174,7 +175,7 @@ def test_structured_stream_over_binary_journal(spark, tmpdir_path):
         journal_format="binary",
     )
     q = run_structured_stream(spark, cfg, available_now=True)
-    q.awaitTermination(timeout=300)
+    await_available_now(q, timeout=300)
     t = KeyBucketedTarget(spark, cfg.target_path, num_buckets=4)
     engine = state_df_to_dict(t.read().drop("bucket", "receiver_idx", "seq"))
     oracle = naive_replay([r.asDict() for r in j.collect()])

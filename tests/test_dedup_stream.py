@@ -14,6 +14,7 @@ from pyspark.sql.types import (
 )
 
 from debezium_connector_ibmi_spark.streaming.dedup_stream import (
+    await_available_now,
     melt_bands,
     near_dup_flag_stream_stateful,
 )
@@ -46,7 +47,7 @@ def _run_to_memory(spark, src, name, ck):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout=300)
+    await_available_now(q, timeout=300)
     return spark.sql(f"SELECT * FROM {name}")
 
 
@@ -116,7 +117,7 @@ def test_restart_recovers_bucket_state(spark, tmpdir_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(timeout=300)
+        await_available_now(q, timeout=300)
 
     _write_docs(spark, src, [(7, _T1)])
     run_phase()  # phase 1: rep=7 parked in state, nothing flagged
@@ -169,7 +170,7 @@ def test_verify_flags_stream_static(spark, tmpdir_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout=300)
+    await_available_now(q, timeout=300)
     got = {
         (r["doc_id"], r["dup_of"])
         for r in spark.sql(
@@ -230,7 +231,7 @@ def test_exact_dup_flag_stream(spark, tmpdir_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout=300)
+    await_available_now(q, timeout=300)
     got = {
         (r["doc_id"], r["dup_of"])
         for r in spark.sql("SELECT doc_id, dup_of FROM exact6").collect()
@@ -296,7 +297,7 @@ def test_verify_sets_materialized_once(spark, tmpdir_path):
             .trigger(availableNow=True)
             .start()
         )
-        assert q.awaitTermination(timeout=300)
+        await_available_now(q, timeout=300)
         got = {
             (r["doc_id"], r["dup_of"])
             for r in spark.sql(
@@ -341,7 +342,7 @@ def test_state_metrics_surface(spark, tmpdir_path):
         .trigger(availableNow=True)
         .start()
     )
-    assert q.awaitTermination(timeout=300)
+    await_available_now(q, timeout=300)
     m = stream_state_metrics(q)
     # 3 distinct texts x 2 bands = 6 bucket representatives
     assert m["state_rows"] == 6

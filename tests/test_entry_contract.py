@@ -1,6 +1,7 @@
-"""Driver-contract sanity: entry() returns rows; every query runs at
-sf0.001 and, where an oracle exists, matches DuckDB (fast subset —
-the full sweep is scripts/check_oracles.py at sf0.01)."""
+"""Driver-contract sanity: entry() returns rows, the registry pairs
+every query with an oracle, and every registry query matches its
+DuckDB oracle at sf0.001 (scripts/check_oracles.py runs the same
+comparison at other scale factors)."""
 
 from __future__ import annotations
 
@@ -17,19 +18,6 @@ from scripts.check_oracles import TABLES, norm_rows  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
-# cheap-but-representative subset for pytest (one per operator family)
-SUBSET = [
-    "cdc_changelog_materialize",
-    "cdc_resume_predicate",
-    "cdc_txn_group",
-    "rel_revenue_by_nation",
-    "doc_minhash_signature",
-    "doc_simhash",
-    "emb_knn_brute_force",
-    # streaming dedup-on-ingest, exact md5-band variant (round 5)
-    "doc_stream_exact_dup",
-]
-
 
 def test_entry_returns_rows(spark):
     df = entry.entry(spark)
@@ -38,11 +26,7 @@ def test_entry_returns_rows(spark):
 
 
 def test_registry_shape():
-    qs = entry.queries()
-    oracles = entry.oracle_sql()
-    assert len(qs) >= 25
-    # every oracle key must have a query
-    assert set(oracles) <= set(qs)
+    assert set(entry.oracle_sql()) == set(entry.queries())
 
 
 @pytest.fixture(scope="module")
@@ -53,7 +37,7 @@ def duck():
     return con
 
 
-@pytest.mark.parametrize("name", SUBSET)
+@pytest.mark.parametrize("name", sorted(entry.oracle_sql()))
 def test_query_matches_oracle(spark, duck, name):
     qs, oracles = entry.queries(), entry.oracle_sql()
     sdf = qs[name](spark, SF)

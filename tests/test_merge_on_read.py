@@ -22,6 +22,7 @@ from debezium_connector_ibmi_spark.datagen.journal import (
     write_journal,
 )
 from debezium_connector_ibmi_spark.sinks.merge import KeyBucketedTarget
+from debezium_connector_ibmi_spark.streaming.dedup_stream import await_available_now
 from debezium_connector_ibmi_spark.streaming.engine import JournalTailer
 from debezium_connector_ibmi_spark.testing import naive_replay, state_df_to_dict
 
@@ -331,7 +332,7 @@ def test_mor_structured_stream(spark, journal_path, oracle, tmpdir_path):
 
     cfg = _cfg(journal_path, f"{tmpdir_path}/s", max_entries_per_batch=500)
     q = run_structured_stream(spark, cfg, available_now=True)
-    q.awaitTermination(timeout=300)
+    await_available_now(q, timeout=300)
     t = _target(spark, cfg)
     c = t.last_commit()
     assert not c["buckets"] and c["deltas"], "stream wrote deltas only"
@@ -468,7 +469,7 @@ def test_mor_stream_delta_count_trigger(spark, journal_path, oracle, tmpdir_path
         mor_compact_max_deltas=1,
     )
     q = run_structured_stream(spark, cfg, available_now=True)
-    q.awaitTermination(timeout=300)
+    await_available_now(q, timeout=300)
     t = _target(spark, cfg)
     c = t.last_commit()
     assert c["buckets"], "compaction never produced a base"

@@ -7,7 +7,6 @@ binding.
 from __future__ import annotations
 
 import time
-from pathlib import Path
 
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
@@ -108,94 +107,3 @@ def test_tailer_marker_does_not_consume_max_batches(spark, tmpdir_path):
     ranges = [o for o in out if "events" in o]
     assert len(markers) == 1
     assert len(ranges) == 1
-
-
-# --- registry verification-priority invariants (round-5 rotation) --------
-def test_registry_priority_list_is_exact_cap():
-    from debezium_connector_ibmi_spark.queries import (
-        DRIVER_VERIFY_CAP,
-        _VERIFY_FIRST,
-        all_oracles,
-        all_queries,
-    )
-
-    q = all_queries()
-    assert len(_VERIFY_FIRST) == DRIVER_VERIFY_CAP
-    assert len(set(_VERIFY_FIRST)) == DRIVER_VERIFY_CAP, "duplicate names"
-    missing = [n for n in _VERIFY_FIRST if n not in q]
-    assert not missing, f"priority list names unknown queries: {missing}"
-    # iteration order of the registry == priority list for the cap
-    assert list(q)[:DRIVER_VERIFY_CAP] == _VERIFY_FIRST
-    # oracles follow the same ordering (driver zips them)
-    o = all_oracles()
-    assert [n for n in list(o)[:DRIVER_VERIFY_CAP] if n in set(_VERIFY_FIRST)] == [
-        n for n in _VERIFY_FIRST if n in o
-    ]
-
-
-def test_registry_round7_changed_queries_inside_cap():
-    from debezium_connector_ibmi_spark.queries import _VERIFY_FIRST
-
-    round7_changed = {
-        # substring-dedup de-skew rewrite
-        "doc_dup_spans",
-        "doc_dup_spans_incremental",
-        "doc_substring_dedup",
-        # minhash/LSH family (checkpointed candidates, semi-join
-        # pruning, scan spread)
-        "doc_minhash_signature",
-        "doc_lsh_near_dup_pairs",
-        "doc_simhash",
-        "doc_near_dup_verified",
-        "doc_dup_clusters",
-        "doc_dedup_keep_best",
-        "doc_stream_near_dup_verified",
-        # textops/corpusops
-        "doc_top_terms",
-        "doc_chunk_tokens",
-        "doc_chunk_dedup",
-        "doc_winnow_fingerprints",
-        "doc_token_count_bpe_merged",
-        # embedding/ANN family (hoisted norms, map-only IVF assign,
-        # broadcast query side)
-        "emb_knn_brute_force",
-        "emb_ann_lsh_bucket",
-        "emb_cosine_near_dup_pairs",
-        "emb_ivf_topk",
-        "emb_ivf_topk_nprobe2",
-        "emb_ivf_kmeans_recall",
-        "emb_semantic_dedup",
-        "emb_stream_semantic_flags",
-    }
-    outside = round7_changed - set(_VERIFY_FIRST)
-    assert not outside, f"changed queries outside the driver cap: {outside}"
-
-
-def test_registry_rotation_freshness_invariant():
-    """Nothing may be verified only by a file older than the PREVIOUS
-    round: every registry query is either inside this round's cap
-    (fresh row incoming) or has an all-three-flags green row in the
-    previous round's CORRECTNESS file."""
-    import json
-
-    from debezium_connector_ibmi_spark.queries import (
-        _VERIFY_FIRST,
-        all_queries,
-    )
-
-    prev = json.loads(
-        (Path(__file__).resolve().parents[1] / "CORRECTNESS_r06.json").read_text()
-    )
-    green_prev = {
-        k
-        for k, v in prev.items()
-        if v.get("rows_match") and v.get("schema_match") and v.get("hash_match")
-    }
-    stale = [
-        name
-        for name in all_queries()
-        if name not in set(_VERIFY_FIRST) and name not in green_prev
-    ]
-    assert not stale, (
-        f"queries outside the cap without a previous-round green row: {stale}"
-    )

@@ -26,6 +26,7 @@ from pyspark.sql.types import (
 
 from debezium_connector_ibmi_spark.streaming.dedup_stream import (
     _flag_group,
+    await_available_now,
     exact_dup_flag_stream,
     melt_bands,
     verify_flags,
@@ -97,7 +98,7 @@ def test_exact_dup_stream_null_text_not_cross_flagged(spark, tmpdir_path):
         .trigger(availableNow=True)
         .start()
     )
-    assert q.awaitTermination(timeout=300)
+    await_available_now(q, timeout=300)
     flags = spark.sql(
         "SELECT doc_id, dup_of FROM r6_exact_null"
     ).collect()
@@ -184,10 +185,6 @@ def test_bpe_merged_oracle_matches_reference():
 def test_await_available_now_raises_on_timeout(spark, tmpdir_path):
     """A rate stream never terminates: the helper must raise (and stop
     the query) rather than return control to read a partial sink."""
-    from debezium_connector_ibmi_spark.streaming.dedup_stream import (
-        await_available_now,
-    )
-
     ck = f"{tmpdir_path}/ck_rate"
     q = (
         spark.readStream.format("rate")

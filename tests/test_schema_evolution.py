@@ -11,6 +11,7 @@ from debezium_connector_ibmi_spark.datagen.journal import (
     JournalGenConfig,
     write_journal,
 )
+from debezium_connector_ibmi_spark.streaming.dedup_stream import await_available_now
 from debezium_connector_ibmi_spark.streaming.engine import JournalTailer
 from debezium_connector_ibmi_spark.streaming.schema_evolution import (
     ColumnChange,
@@ -132,7 +133,7 @@ def test_evolution_in_streaming_mode(spark, journal_path, tmpdir_path):
         num_buckets=4,
     )
     q = run_structured_stream(spark, cfg, available_now=True, evolution=SPEC)
-    q.awaitTermination(timeout=300)
+    await_available_now(q, timeout=300)
     t = KeyBucketedTarget(spark, cfg.target_path, num_buckets=4)
     assert t.schema_version() == 3
     assert "quality" not in t.read().columns  # add->widen->drop nets out

@@ -19,6 +19,7 @@ from debezium_connector_ibmi_spark.sources.snapshot import (
     initial_snapshot,
     journal_head,
 )
+from debezium_connector_ibmi_spark.streaming.dedup_stream import await_available_now
 from debezium_connector_ibmi_spark.streaming.engine import (
     JournalTailer,
     run_structured_stream,
@@ -167,7 +168,7 @@ def test_structured_streaming_mode(spark, tmpdir_path):
     write_journal(spark, GEN, journal, num_files=6)
     cfg = _cfg(tmpdir_path, journal, delete_mode="rewrite")
     q = run_structured_stream(spark, cfg, available_now=True)
-    q.awaitTermination(timeout=300)
+    await_available_now(q, timeout=300)
 
     target = KeyBucketedTarget(
         spark, cfg.target_path, num_buckets=cfg.num_buckets, delete_mode="rewrite"

@@ -13,6 +13,7 @@ from debezium_connector_ibmi_spark.sources.journal_source import (
     JOURNAL_SCHEMA,
     read_journal_stream,
 )
+from debezium_connector_ibmi_spark.streaming.dedup_stream import await_available_now
 from debezium_connector_ibmi_spark.streaming.metrics_stream import (
     pair_stream_stateful,
     windowed_op_counts,
@@ -57,7 +58,7 @@ def test_windowed_op_counts(spark, tmpdir_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout=300)
+    await_available_now(q, timeout=300)
     # append mode emits only watermark-closed windows; re-derive the
     # expected counts for those windows from the batch data
     got = {
@@ -129,7 +130,7 @@ def test_stateful_pairing_survives_restart(spark, tmpdir_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(timeout=300)
+        await_available_now(q, timeout=300)
         return out
 
     phase1 = run("p1")  # ends with the UB parked in checkpointed state
@@ -251,7 +252,7 @@ def test_dedup_stream_drops_redeliveries(spark, tmpdir_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout=300)
+    await_available_now(q, timeout=300)
     assert len(out) == n_unique
     assert len({(r["receiver_idx"], r["seq"]) for r in out}) == n_unique
     j.unpersist()

@@ -14,6 +14,7 @@ from debezium_connector_ibmi_spark.datagen.journal import (
     generate_journal,
 )
 from debezium_connector_ibmi_spark.sinks.merge import KeyBucketedTarget
+from debezium_connector_ibmi_spark.streaming.dedup_stream import await_available_now
 from debezium_connector_ibmi_spark.streaming.engine import run_structured_stream
 from debezium_connector_ibmi_spark.testing import naive_replay, state_df_to_dict
 
@@ -45,7 +46,7 @@ def test_stream_stop_and_restart(spark, tmpdir_path):
             break
         time.sleep(0.5)
     q.stop()
-    q.awaitTermination(timeout=60)
+    assert q.awaitTermination(timeout=60)
 
     target = KeyBucketedTarget(
         spark, cfg.target_path, num_buckets=4, delete_mode="rewrite"
@@ -55,7 +56,7 @@ def test_stream_stop_and_restart(spark, tmpdir_path):
 
     # phase 2: restart from the same checkpoint, drain to the end
     q2 = run_structured_stream(spark, cfg, available_now=True)
-    q2.awaitTermination(timeout=300)
+    await_available_now(q2, timeout=300)
 
     engine = state_df_to_dict(target.read().drop("bucket", "receiver_idx", "seq"))
     oracle = naive_replay([r.asDict() for r in j.collect()], delete_mode="rewrite")
@@ -104,7 +105,7 @@ def test_tail_then_stream_same_target(spark, tmpdir_path):
         "append"
     ).parquet(half)
     q = run_structured_stream(spark, cfg, available_now=True)
-    q.awaitTermination(timeout=300)
+    await_available_now(q, timeout=300)
 
     target = KeyBucketedTarget(
         spark, cfg.target_path, num_buckets=4, delete_mode="rewrite"

@@ -21,6 +21,7 @@ from debezium_connector_ibmi_spark.sources.journal_source import (
     JOURNAL_SCHEMA,
     read_journal_stream,
 )
+from debezium_connector_ibmi_spark.streaming.dedup_stream import await_available_now
 from debezium_connector_ibmi_spark.streaming.fanout import MultiTableTailer
 from debezium_connector_ibmi_spark.streaming.metrics_stream import (
     txn_group_stream_stateful,
@@ -51,7 +52,7 @@ def _drain(spark, jdir, out, ck):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout=300)
+    await_available_now(q, timeout=300)
 
 
 def test_txn_group_spans_restart(spark, tmpdir_path):
